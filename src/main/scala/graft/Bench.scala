@@ -11,8 +11,9 @@ package graft
   *    first-touch samples are slower, so the per-query MIN ignores
   *    them — but they are recorded, so a run killed after pass 1
   *    still yields a full parsable per-query map);
-  *  - caches cleared after every run: each sample pays its own persist
-  *    cost and leaves nothing behind (samples are like-for-like);
+  *  - every run ends with [[graft.plans.Checkpoint.release]]: each
+  *    sample pays its own pins and truncations and leaves nothing
+  *    behind (samples are like-for-like);
   *  - ALL raw samples are recorded in `samples` alongside the min in
   *    `queries`, so cross-round comparisons can be made on matching
   *    methodology (ADVICE r3: min-of-2 vs r1/r2 single-pass);
@@ -98,11 +99,9 @@ object Bench {
 
     def runOnce(name: String): Unit = {
       defs(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      // queries that persist intermediates (the dedup family) must not
-      // accumulate cache across runs; each measurement pays its own
-      // persist cost and leaves nothing behind
-      spark.catalog.clearCache()
-      graft.queries.DistRank.release()
+      // each measurement pays its own pins and truncations and leaves
+      // nothing behind
+      graft.plans.Checkpoint.release()
     }
 
     // samples carry their pass index so per-pass subtotals (the

@@ -10,22 +10,7 @@ object Explain {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val spark = Sessions.local("graft-explain")
-    // The graph family's public queries finalize through an eager
-    // checkpoint, so their registered plans bottom out at a LogicalRDD;
-    // "<name>:lazy" explains the REAL dataflow the checkpoint executes
-    // (the PlanAuditSpec lazySiblings device).
-    val lazySiblings: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map(
-        "gr_pagerank:lazy" -> ((s, d) => graft.queries.Graph.pageRankPlan(s, d)._1),
-        "gr_khop:lazy" -> ((s, d) => graft.queries.Graph.kHopPlan(s, d)._1),
-        "gr_triangles:lazy" -> ((s, d) => graft.queries.Graph.coTrianglesPlan(s, d)._1),
-        "gr_salsa:lazy" -> ((s, d) => graft.queries.Graph.salsaPlan(s, d)._1),
-        "gr_label_prop:lazy" -> ((s, d) => graft.queries.Graph.labelPropPlan(s, d)._1),
-        "gr_modularity:lazy" -> ((s, d) => graft.queries.Graph.modularityPlan(s, d)._1),
-        "gr_harmonic:lazy" -> ((s, d) => graft.queries.Graph.harmonicPlan(s, d)._1),
-        "gr_ktruss:lazy" -> ((s, d) => graft.queries.Graph.kTrussPlan(s, d)._1),
-      )
-    val all = SparkEntry.queries ++ SparkEntry.benchOnlyDefs.map(d => d.name -> d.fn) ++ lazySiblings
+    val all = SparkEntry.queries ++ SparkEntry.benchOnlyDefs.map(d => d.name -> d.fn)
     println("BEGIN_PLAN " + name)
     // SPARK_GRAFT_EXPLAIN_MODE=formatted emits `.explain("formatted")`
     // output (numbered operators + details incl. PushedFilters and

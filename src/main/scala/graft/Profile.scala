@@ -52,8 +52,7 @@ object Profile {
       val t0 = System.nanoTime()
       all(name)(spark, dir).write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      graft.queries.DistRank.release()
+      graft.plans.Checkpoint.release()
       dt
     }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.FloatType
 
+import scala.jdk.CollectionConverters._
+
 /** Growth-curve evidence for the dedup/ANN family's scale claims
   * (VERDICT r2 #7): measure wall time AND candidate-pair counts at 1×
   * (sf0.1) and on a synthesized 10× corpus, so "sub-quadratic candidate
@@ -204,12 +206,15 @@ object ScaleBench {
       val lv = graft.queries.LlmVectors
       val base = lv.embRelation(spark, baseDir)
       // the persisted index artifact: materialized once, reused per
-      // increment (production keeps this in the lake)
-      val frozen = graft.plans.Checkpoint.truncate(lv.ivfFrozenCentroids(base))
+      // increment (production keeps this in the lake). Collected into a
+      // local relation rather than truncated, so it lives outside the
+      // per-run Checkpoint scope that each run() releases
+      val c = lv.ivfFrozenCentroids(base)
+      val frozen = spark.createDataFrame(c.collect().toSeq.asJava, c.schema)
       def run(df: => DataFrame): Double = {
         val t0 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache(); graft.queries.DistRank.release()
+        graft.plans.Checkpoint.release()
         (System.nanoTime() - t0) / 1e9
       }
       run(lv.ivfDeltaCodesFrom(base, frozen)); run(lv.ivfFullCodes(spark, baseDir)) // warmup
@@ -248,10 +253,10 @@ object ScaleBench {
       def run(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
         val t0 = System.nanoTime()
         fn(spark, dir).write.mode("overwrite").format("noop").save()
-        // timestamp BEFORE cache teardown (ADVICE r14 #3): clearCache
-        // cost must not land in the growth ratios
+        // timestamp BEFORE the release: freeing the query's holds
+        // must not land in the growth ratios
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); graft.queries.DistRank.release()
+        graft.plans.Checkpoint.release()
         dt
       }
       val disjoint: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -304,7 +309,7 @@ object ScaleBench {
         val t0 = System.nanoTime()
         graft.queries.Graph.coTriangles(spark, dir)
           .write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache(); graft.queries.DistRank.release()
+        graft.plans.Checkpoint.release()
         (System.nanoTime() - t0) / 1e9
       }
       run(baseDir) // warmup
@@ -590,7 +595,7 @@ object ScaleBench {
     }
     def runQuery(fn: (SparkSession, String) => DataFrame, dir: String): Unit = {
       fn(spark, dir).write.mode("overwrite").format("noop").save()
-      spark.catalog.clearCache(); graft.queries.DistRank.release()
+      graft.plans.Checkpoint.release()
     }
 
     // warmup (JIT/codegen) on the small corpus
@@ -603,7 +608,7 @@ object ScaleBench {
     }
     val cands = candidateCounts.map { case (name, fn) =>
       def count(dir: String): Long = {
-        val n = fn(spark, dir).count(); spark.catalog.clearCache(); graft.queries.DistRank.release(); n
+        val n = fn(spark, dir).count(); graft.plans.Checkpoint.release(); n
       }
       (name, count(baseDir), count(x10Dir))
     }
@@ -617,7 +622,7 @@ object ScaleBench {
     ).filter { case (n, _) => only.forall(_.contains(n)) }
     val states = stateCounts.map { case (name, fn) =>
       def count(dir: String): Long = {
-        val n = fn(spark, dir).count(); spark.catalog.clearCache(); graft.queries.DistRank.release(); n
+        val n = fn(spark, dir).count(); graft.plans.Checkpoint.release(); n
       }
       (name, count(baseDir), count(x10Dir))
     }

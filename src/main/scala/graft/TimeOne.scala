@@ -17,11 +17,11 @@ object TimeOne {
     val times = (1 to n).map { _ =>
       val t0 = System.nanoTime()
       all(name)(spark, dir).write.mode("overwrite").format("noop").save()
-      // timestamp BEFORE cache teardown (ADVICE r14 #3): clearCache
-      // cost is bookkeeping, not query time, and would land straight
-      // in SCALE_CURVE growth ratios
+      // timestamp BEFORE the release: freeing the query's holds is
+      // bookkeeping, not query time, and would land straight in
+      // SCALE_CURVE growth ratios
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      graft.plans.Checkpoint.release()
       dt
     }
     println(f"""{"metric":"timeone","query":"$name","dir":"$dir","secs":[${times.map(t => f"$t%.3f").mkString(",")}]}""")

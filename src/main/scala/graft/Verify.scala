@@ -32,9 +32,8 @@ object Verify {
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: ${failed(name)}")
       } finally {
-        // rank-device persist lifecycle (VERDICT r15 #4): no
-        // MEMORY_AND_DISK residue outlives the gate that made it
-        graft.queries.DistRank.release()
+        // nothing a gate pinned or truncated outlives the gate
+        graft.plans.Checkpoint.release()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

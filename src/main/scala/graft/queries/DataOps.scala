@@ -116,7 +116,7 @@ object DataOps {
     * cannot flip boundary rows between engines.
     *
     * Scale shape (r18 — VERDICT r17 #1): ONE map-combined fact pass
-    * to the (type, 2-dp value) histogram, tracked-persisted; the
+    * to the (type, 2-dp value) histogram, pinned; the
     * median, the MAD (median of |v − med| over the |·|-folded
     * histogram, weights summed on the fold — [[Pctl.distHist]]'s
     * duplicate-row contract) and the fence count are all grid algebra
@@ -134,9 +134,9 @@ object DataOps {
       .select(col("event_type").as("grp"), col("value").as("v"))
     // events.value is a 2-dp domain: distinct values are corpus-size-
     // independent (the distBounded envelope), so the histogram is the
-    // cheapest relation in the query — tracked: it feeds the median
+    // cheapest relation in the query — pinned: it feeds the median
     // device, the MAD fold and the fence count
-    val hist = DistRank.tracked(
+    val hist = graft.plans.Checkpoint.pin(
       li.groupBy(col("grp"), col("v")).agg(count(lit(1)).as("c")))
     val med = Pctl.distHist(hist, Seq("grp"), "v", "c",
       Seq("med" -> 0.5), bounded = true)
@@ -539,21 +539,21 @@ object DataOps {
     // histogram — bit-equal to the row-multiset percentile, so the
     // oracle (which still writes the rest fan the readable way) is
     // unchanged.
-    val counts = DistRank.tracked(Tables.t(s, dir, "events")
+    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "events")
       .select(col("event_type").as("t"),
         round(col("value") * 100).cast(LongType).as("b"))
       .groupBy(col("t"), col("b")).agg(count(lit(1)).as("c")))
     val allB = counts.groupBy(col("b")).agg(sum(col("c")).as("l"))
     val types = counts.select(col("t")).distinct()
     // completed (type × bucket) grid with own and rest counts — the
-    // ops_ks_drift bounded-BNLJ grid shape; tracked: the fence device
+    // ops_ks_drift bounded-BNLJ grid shape; pinned: the fence device
     // and the binning pass both read it
-    val grid0 = DistRank.tracked(allB.crossJoin(broadcast(types))
+    val grid0 = graft.plans.Checkpoint.pin(allB.crossJoin(broadcast(types))
       .join(counts, Seq("t", "b"), "left")
       .select(col("t"), col("b"),
         coalesce(col("c"), lit(0L)).as("c_own"),
         (col("l") - coalesce(col("c"), lit(0L))).as("c_rest")))
-    val fences = DistRank.tracked(
+    val fences = graft.plans.Checkpoint.pin(
       Pctl.distHist(grid0, Seq("t"), "b", "c_rest",
           (1 to 9).map(i => s"f$i" -> i / 10.0),
           // bounded: the histogram IS the 2-dp bucket domain — a

@@ -5,13 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The shared distributed-rank device (VERDICT r14 #2): exact ranks,
+/** The shared distributed-rank device: exact ranks,
   * midranks and cumulative counts WITHOUT a global ordered window.
   *
   * A `rank()/row_number() OVER (ORDER BY v)` on a fact-sized relation
   * plans as a single-partition WindowExec — one reducer sorts
-  * everything, the scale-killer class behind the WindowExec spill
-  * warnings that drowned BENCH_r14's tail. This device is the
+  * everything, the scale-killer class behind WindowExec spill
+  * warnings. This device is the
   * two-level prefix-sum decomposition [[StreamingGates.concurrency]]
   * already ships (per-day partitioned sums + day-level carry),
   * generalized: rows are assigned a BUCKET by a monotone function of
@@ -46,105 +46,11 @@ object DistRank {
     */
   val Buckets = 1024
 
-  /** Persist lifecycle (VERDICT r15 #4, scoped per thread in r17 —
-    * VERDICT r16 #4 / ADVICE r16): every DataFrame this device
-    * persists is tracked in a THREAD-LOCAL scope; [[release]]
-    * unpersists only the calling thread's trackings. The two mains
-    * (Verify, Bench) build, materialize and release each gate on one
-    * thread, so their behavior is unchanged — but two gates built and
-    * materialized CONCURRENTLY (a long-lived session embedding the
-    * query surface, parallel test suites) can no longer evict each
-    * other's in-flight histograms: each thread's release() touches
-    * only its own persists, so the one-fact-pass cost contract holds
-    * under concurrency, not just under the mains' sequential loop
-    * (DistRankSpec pins the isolation). CONTRACT for embedders: call
-    * `DistRank.release()` on the thread that BUILT the query after
-    * materializing it — a release() from a different thread warns and
-    * leaves the scope persisted; [[releaseAll]] is the cross-thread
-    * escape hatch (ADVICE r17).
+  /** Frees the calling thread's held intermediates. Kept for callers
+    * that predate [[graft.plans.Checkpoint.release]], which owns the
+    * lifecycle.
     */
-  private val trackedDfs =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]] {
-      override def initialValue() =
-        scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    }
-
-  // Global registry BEHIND the thread-local scopes (ADVICE r17): every
-  // live tracked persist, whichever thread owns it. Exists so (a)
-  // [[releaseAll]] can evict cross-thread residue an embedder's
-  // build-on-pool-thread pattern would otherwise leak until
-  // clearCache, and (b) [[release]] can WARN when its own scope is
-  // empty while other scopes hold live persists — the silent-no-op
-  // case the r17 ThreadLocal move introduced. Identity-keyed: tracked
-  // DataFrames are distinct objects even when their plans are equal.
-  private val allTracked: java.util.Set[DataFrame] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]()))
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Persist `df` under the [[release]] lifecycle (calling thread's
-    * scope). Public for gates that reference a device output (or any
-    * tiny derived relation) more than once: without this, every
-    * reference re-executes the whole device subplan — only its
-    * internal histogram is cached (the r16 psi_drift double-device
-    * regression).
-    *
-    * WHEN NOT TO TRACK (r18, measured): if the repeated consumers
-    * share the IDENTICAL subplan (same aggregate, same keys),
-    * ReuseExchange already deduplicates its shuffle within the one
-    * action — the fact is scanned once without any persist, and
-    * adding one measured 1.9× slower ([[StreamingGates.madAnomaly]],
-    * pinned by PlanAuditSpec's ReusedExchange probe). Track only when
-    * the repeats are structurally DIFFERENT subplans (post-join
-    * aggregates, the [[DataOps.outlierBounds]] shape) or span
-    * separate actions.
-    */
-  def tracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedDfs.get() += p
-    allTracked.add(p)
-    p
-  }
-
-  private def persistTracked(df: DataFrame): DataFrame = tracked(df)
-
-  /** Unpersist every histogram the rank devices have persisted on THIS
-    * thread since its last release. Safe at any point: an in-flight
-    * plan that loses its cached blocks recomputes from lineage.
-    * A release() that finds its own scope empty while OTHER threads'
-    * scopes hold live persists logs a warning instead of silently
-    * doing nothing (ADVICE r17: a caller that built on a pool thread
-    * and releases from the caller thread would otherwise accumulate
-    * MEMORY_AND_DISK residue with no signal) — the cross-thread
-    * escape hatch is [[releaseAll]].
-    */
-  def release(): Unit = {
-    val buf = trackedDfs.get()
-    if (buf.isEmpty && !allTracked.isEmpty)
-      log.warn(s"DistRank.release(): this thread's scope is empty but " +
-        s"${allTracked.size} tracked persist(s) are live on other threads " +
-        "— release() only unpersists the scope of the thread that BUILT " +
-        "the query; use DistRank.releaseAll() for cross-thread cleanup")
-    buf.foreach { df => df.unpersist(false); allTracked.remove(df) }
-    buf.clear()
-  }
-
-  /** Unpersist EVERY live tracked persist, whichever thread created it
-    * (ADVICE r17) — the escape hatch for embedders that build queries
-    * on pool threads and clean up elsewhere. Other threads' scope
-    * buffers may retain references until their own next release();
-    * unpersist is idempotent, so that double-release is harmless.
-    */
-  def releaseAll(): Unit = {
-    val snapshot = allTracked.synchronized {
-      val arr = new java.util.ArrayList[DataFrame](allTracked)
-      allTracked.clear()
-      arr
-    }
-    snapshot.forEach(_.unpersist(false))
-  }
+  def release(): Unit = graft.plans.Checkpoint.release()
 
   /** Exact floor-division of nonnegative Longs: (a − a mod d) divides
     * exactly, and exact-integer double division is correctly rounded to
@@ -198,12 +104,11 @@ object DistRank {
     // the input histogram feeds three subplans (bounds, local windows,
     // bucket totals); persisting it keeps the device at ONE pass over
     // whatever fact relation produced it. Distinct-value-sized — the
-    // cheapest relation in the query. Tracked for [[release]].
+    // cheapest relation in the query.
     // persist=false is for callers whose input is ALREADY cached (or
     // aggregate-cheap to recompute): the three subplans then re-read
-    // the caller's cache instead of materializing a second copy
-    // (VERDICT r15 #5 — the ops_spearman persist double-pay).
-    val df = if (persist) persistTracked(df0) else df0
+    // the caller's cache instead of materializing a second copy.
+    val df = if (persist) graft.plans.Checkpoint.pin(df0) else df0
     val pc = parts.map(col)
     val vType = df.schema(v).dataType
     val totAggs = if (groupTotals) sumCols.map(c => sum(col(c)).as(s"${c}_tot"))
@@ -212,7 +117,7 @@ object DistRank {
       .agg(min(col(v)).as("__lo"),
         (max(col(v)).as("__hi") +: totAggs): _*)
     // group bounds are a |groups|-row (or 1-row) aggregate — the
-    // broadcast-1-row folding device (VERDICT r13 #5)
+    // broadcast-1-row folding device
     val withB =
       (if (parts.isEmpty) df.crossJoin(broadcast(bounds))
        else df.join(broadcast(bounds), parts))
@@ -273,7 +178,7 @@ object DistRank {
                 tieBreaks: Seq[String], out: String): DataFrame = {
     val eff = if (desc) "__negv" else v
     // persisted for the same three-subplan reuse as [[prefixLt]]
-    val base0 = persistTracked(
+    val base0 = graft.plans.Checkpoint.pin(
       if (desc) df.withColumn("__negv", -col(v)) else df)
     val pc = parts.map(col)
     val vType = base0.schema(eff).dataType

@@ -67,7 +67,7 @@ object EdfOps {
     // prefix leg by construction; every oracle is unchanged). The
     // per-partition sort is |2-dp value domain| rows, bounded by the
     // value range, not the corpus (the [[Pctl.distBounded]] argument).
-    val counts = DistRank.tracked(Tables.t(s, dir, "events")
+    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "events")
       .select(col("event_type"), round(col("value") * 100).cast(LongType).as("b"))
       .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c")))
     val allB = counts.groupBy(col("b")).agg(sum(col("c")).as("l"))
@@ -83,8 +83,8 @@ object EdfOps {
     val wTot = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"))
     // grid feeds the pooled-cumulative aggregate AND the statistic
-    // readout — tracked-persisted so the window pass runs once
-    val grid = DistRank.tracked(real.unionByName(zeros)
+    // readout — pinned so the window pass runs once
+    val grid = graft.plans.Checkpoint.pin(real.unionByName(zeros)
       .withColumn("cum_s", sum(col("c")).over(wCum))
       .withColumn("n_s", sum(col("c")).over(wTot))
       .filter(col("__g") === 1)
@@ -509,10 +509,9 @@ object EdfOps {
                                  spreadFan: Boolean): DataFrame = {
     val dec = DecimalType(38, 0)
     // counts is referenced by allB / nS / nAll and is world 0's
-    // membership relation — tracked-persisted so the fact aggregates
-    // ONCE, not per reference (r16, the psi_drift double-device
-    // lesson)
-    val counts = DistRank.tracked(Tables.t(s, dir, "events")
+    // membership relation — pinned so the fact aggregates
+    // ONCE, not per reference
+    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "events")
       .select(col("event_type"), round(col("value") * 100).cast(LongType).as("b"))
       .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c")))
     val allB = counts.groupBy(col("b")).agg(sum(col("c")).as("c_all"))
@@ -607,9 +606,9 @@ object EdfOps {
       .withColumn("n_t", sum(col("c")).over(wTot))
       .filter(col("__g") === 1)
     // stats is (R+1)·|types| rows but feeds BOTH the observed (r = 0)
-    // and the tail (r ≥ 1) readouts — tracked-persisted so the whole
-    // fan pipeline executes once, not twice (the r16 psi_drift lesson)
-    val stats = DistRank.tracked(grid
+    // and the tail (r ≥ 1) readouts — pinned so the whole
+    // fan pipeline executes once, not twice
+    val stats = graft.plans.Checkpoint.pin(grid
       .join(pooled, "b")
       .crossJoin(broadcast(nAll))
       .withColumn("d", col("cum_s").cast(dec) * col("n_all") -

@@ -23,30 +23,41 @@ object Graph {
   private val Scale = 1000000000000L // rank mass fixed-point scale
   private val Iters = 5
 
-  /** Self-releasing persist lifecycle (VERDICT r9 #3): every public
-    * graph query eagerly materializes its node-sized result through
-    * [[graft.plans.Checkpoint.truncate]] and THEN unpersists the
-    * edge-sized intermediates it pinned — so a long-lived interactive
-    * session is left with ZERO CacheManager entries per call, not four
-    * MEMORY_AND_DISK relations per data directory. The truncated
-    * result no longer references the persisted frames (its lineage
-    * bottoms out at the checkpoint), which is what makes the unpersist
-    * safe. The `*Plan` siblings expose the un-truncated plans so
-    * PlanAuditSpec still audits the REAL dataflow, not a LogicalRDD.
+  /** Symmetric (customer 2k ↔ supplier 2k+1) trade edges, PERSISTED
+    * over a CHECKPOINT-TRUNCATED pair build: the distinct (cust, supp)
+    * relation — the expensive orders⋈lineitem product of the build —
+    * is materialized once through [[graft.plans.Checkpoint.truncate]],
+    * so the persisted edge union's lineage bottoms out at a compact
+    * edge-sized artifact. Without the truncation, a cache eviction
+    * under memory pressure re-derives the edges by re-running the fact
+    * join per iteration; with it, a miss re-reads checkpoint blocks.
+    * Both holds live in the caller's [[graft.plans.Checkpoint]] scope
+    * until its release.
     */
-  private def finalized(result: DataFrame, pinned: DataFrame*): DataFrame = {
-    // NOTE (r18, measured): do NOT eagerly count() the pinned builds
-    // here to pre-populate their caches. AQE's parallel query-stage
-    // materialization CAN race-recompute a lazily-persisted build
-    // (the triangle profile showed the pair build executing three
-    // times concurrently), but forcing each build with its own
-    // count() job was measured 1.2-1.4× SLOWER across the family
-    // (pagerank/khop/ktruss/harmonic) — the serial count jobs cost
-    // more than the overlapped redundant computation they remove.
-    val out = graft.plans.Checkpoint.truncate(result)
-    pinned.foreach(_.unpersist())
-    out
+  private[graft] def tradeEdges(s: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.t(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey").cast(LongType).as("cust"))
+    val li = Tables.t(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey").cast(LongType).as("supp"))
+    val trade = graft.plans.Checkpoint.truncate(
+      orders.join(li, col("o_orderkey") === col("l_orderkey"))
+        .select((col("cust") * 2).as("c"), (col("supp") * 2 + 1).as("p"))
+        .distinct())
+    graft.plans.Checkpoint.pin(trade.select(col("c").as("src"), col("p").as("dst"))
+      .unionByName(trade.select(col("p").as("src"), col("c").as("dst"))))
   }
+
+  /** Salting knob for the per-iteration contribution join: `0`/unset =
+    * plain shuffle join. In THIS schema the customer side's degree is
+    * bounded by the supplier dim, but a supplier node's degree grows
+    * with the customer count — i.e. with the data — so a power-law
+    * supplier would concentrate one reduce task at 100 TB. Setting the
+    * conf to N spreads each hot src over N tasks via
+    * [[graft.operators.Skew.saltedJoin]] (rank side replicated N ways —
+    * node-sized, so the replication is cheap; the edge side is never
+    * duplicated). SkewGraphSpec proves bit-identical ranks either way.
+    */
+  val SaltsConf = "graft.graph.salts"
 
   /** 5-iteration PageRank (d = 0.85) over the bipartite trade graph:
     * nodes are customers (2k) and suppliers (2k+1), symmetric edges
@@ -63,62 +74,11 @@ object Graph {
     * that layout, with [[graft.plans.Checkpoint]] available to truncate
     * the growing lineage exactly as star-CC does.
     */
-  /** Symmetric (customer 2k ↔ supplier 2k+1) trade edges, PERSISTED
-    * over a CHECKPOINT-TRUNCATED pair build: the distinct (cust, supp)
-    * relation — the expensive orders⋈lineitem product of the build —
-    * is materialized once through [[graft.plans.Checkpoint.truncate]],
-    * so the persisted edge union's lineage bottoms out at a compact
-    * edge-sized artifact. Without the truncation, a cache eviction
-    * under memory pressure re-derives the edges by re-running the fact
-    * join per iteration (the r8 driver bench showed exactly that
-    * failure mode: 23.9 s contended vs 4.9-9.2 s quiet); with it, a
-    * miss re-reads checkpoint blocks.
-    *
-    * Lifecycle: SELF-RELEASING — every public query that pins this
-    * relation unpersists it in [[finalized]] once the truncated result
-    * is materialized, so nothing stays pinned after the query returns
-    * (SkewGraphSpec "graph queries leave no pinned cache entries").
-    * Within one call the CacheManager dedupes plan-identical persists,
-    * so pageRank's two handles (edges, edgesD) are distinct entries but
-    * repeated calls never accumulate.
-    */
-  private[graft] def tradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey").cast(LongType).as("cust"))
-    val li = Tables.t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey").cast(LongType).as("supp"))
-    val trade = graft.plans.Checkpoint.truncate(
-      orders.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select((col("cust") * 2).as("c"), (col("supp") * 2 + 1).as("p"))
-        .distinct())
-    trade.select(col("c").as("src"), col("p").as("dst"))
-      .unionByName(trade.select(col("p").as("src"), col("c").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Salting knob for the per-iteration contribution join: `0`/unset =
-    * plain shuffle join. In THIS schema the customer side's degree is
-    * bounded by the supplier dim, but a supplier node's degree grows
-    * with the customer count — i.e. with the data — so a power-law
-    * supplier would concentrate one reduce task at 100 TB. Setting the
-    * conf to N spreads each hot src over N tasks via
-    * [[graft.operators.Skew.saltedJoin]] (rank side replicated N ways —
-    * node-sized, so the replication is cheap; the edge side is never
-    * duplicated). SkewGraphSpec proves bit-identical ranks either way.
-    */
-  val SaltsConf = "graft.graph.salts"
-
   def pageRank(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = pageRankPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  /** Lazy plan + the frames it pins — audit surface and [[pageRank]] body. */
-  private[graft] def pageRankPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val edges = tradeEdges(s, dir)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // node count folded in as a broadcast 1-row aggregate (VERDICT r14
-    // #3 — the salsa device, Graph.scala salsaPlan): symmetric edges →
+    // node count folded in as a broadcast 1-row aggregate (the
+    // [[salsa]] device): symmetric edges →
     // every node appears as a src, so outdeg IS the node relation. It
     // seeds BOTH the uniform start mass and the per-iteration teleport
     // base (1 − d)·Scale/n; the base rides the rank relation as a
@@ -126,8 +86,7 @@ object Graph {
     // the iteration never needs a literal and no .count() runs on the
     // driver.
     val nN = outdeg.agg(count(lit(1)).as("n_n"))
-    val edgesD = edges.join(outdeg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edgesD = graft.plans.Checkpoint.pin(edges.join(outdeg, "src"))
     val salts = s.conf.get(SaltsConf, "0").toInt
     var ranks = outdeg.crossJoin(broadcast(nN))
       .select(col("src").as("node"),
@@ -146,12 +105,11 @@ object Graph {
         .select(col("dst").as("node"),
           (col("base") + expr("(85 * m) div 100")).as("rank"), col("base"))
     }
-    val out = ranks
+    ranks
       .select(
         when(col("node") % 2 === 0, "customer").otherwise("supplier").as("kind"),
         expr("node div 2").as("key"), col("rank"))
       .orderBy(col("rank").desc, col("kind"), col("key"))
-    (out, Seq(edges, edgesD))
   }
 
   // DuckDB SUM(BIGINT) yields HUGEINT — every iteration casts it back
@@ -201,7 +159,7 @@ object Graph {
     // seed nation = the smallest nation key PRESENT among suppliers:
     // nation 0 has no suppliers at the smallest scale factors, a fixed
     // literal would make the seed set empty there. Folded in as a
-    // broadcast 1-row aggregate (VERDICT r13 #5) — no driver job; the
+    // broadcast 1-row aggregate — no driver job; the
     // oracle uses the equivalent scalar subquery.
     val seedNation = supplier.agg(min(col("s_nationkey")).as("seed_nation"))
     supplier
@@ -232,11 +190,6 @@ object Graph {
     * traverses.
     */
   def kHop(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = kHopPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  private[graft] def kHopPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val edges = tradeEdges(s, dir)
     val seeds = kHopSeeds(s, dir)
     var settled = seeds
@@ -246,12 +199,11 @@ object Graph {
         frontierStep(edges, frontier, settled))
       settled = settled.unionByName(frontier)
     }
-    val out = settled
+    settled
       .select(
         when(col("node") % 2 === 0, "customer").otherwise("supplier").as("kind"),
         expr("node div 2").as("key"), col("hop"))
       .orderBy(col("hop"), col("kind"), col("key"))
-    (out, Seq(edges))
   }
 
   val kHopOracle: String = {
@@ -296,36 +248,29 @@ object Graph {
     * is a rounded ratio of exact integers.
     */
   def coTriangles(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = coTrianglesPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  private[graft] def coTrianglesPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val it = Tables.t(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").cast(LongType).as("p"))
       .distinct()
-    // persisted: consumed by the degree aggregate AND the orientation
-    // join — unpersisted, the per-order self-join runs once per
-    // consumer (released by finalized() once the result materializes)
-    val pairs = it.as("a").join(it.as("b"),
+    // pinned: consumed by the degree aggregate AND the orientation
+    // join — without the pin the per-order self-join runs once per
+    // consumer
+    val pairs = graft.plans.Checkpoint.pin(it.as("a").join(it.as("b"),
         col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .select(col("a.p").as("x"), col("b.p").as("y"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val deg = pairs.select(col("x").as("node"))
       .unionByName(pairs.select(col("y").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val fwd = col("dx") < col("dy") || (col("dx") === col("dy") && col("x") < col("y"))
-    val ed = pairs
+    // pinned: the oriented edge set feeds both wedge sides and the
+    // closing join — three consumers of one edge-sized artifact
+    val ed = graft.plans.Checkpoint.pin(pairs
       .join(deg.select(col("node").as("x"), col("deg").as("dx")), "x")
       .join(deg.select(col("node").as("y"), col("deg").as("dy")), "y")
       .select(
         when(fwd, col("x")).otherwise(col("y")).as("src"),
         when(fwd, col("y")).otherwise(col("x")).as("dst"),
-        when(fwd, col("dy")).otherwise(col("dx")).as("dd"))
-      // persisted: the oriented edge set feeds both wedge sides and
-      // the closing join — three consumers of one edge-sized artifact
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(fwd, col("dy")).otherwise(col("dx")).as("dd")))
     val e1 = ed.select(col("src").as("a"), col("dst").as("b"), col("dd").as("db"))
     val e2 = ed.select(col("src").as("a2"), col("dst").as("c"), col("dd").as("dc"))
     val wedges = e1.join(e2, col("a") === col("a2") &&
@@ -337,14 +282,13 @@ object Graph {
     val corners = tris
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("tri"))
-    val out = deg.join(corners, Seq("node"), "left")
+    deg.join(corners, Seq("node"), "left")
       .select(col("node"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
       .withColumn("coeff",
         when(col("deg") > 1,
           round(lit(2.0) * col("tri") / (col("deg") * (col("deg") - 1)), 6))
           .otherwise(lit(0.0)))
       .orderBy(col("node"))
-    (out, Seq(pairs, ed))
   }
 
   val coTrianglesOracle: String =
@@ -408,8 +352,19 @@ object Graph {
     * (Montresor et al. 2013).
     */
   def kCore(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = kCorePlan(s, dir)
-    finalized(result, pinned: _*)
+    var edges = supportEdges(s, dir)
+    for (_ <- 1 to CoreRounds) {
+      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= CoreK)
+        .select(col("src").as("node"))
+      edges = graft.plans.Checkpoint.truncate(
+        edges
+          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+    }
+    edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("core_deg"))
+      .orderBy(col("node"))
   }
 
   /** Support denominator: the threshold is RELATIVE to order volume —
@@ -429,8 +384,7 @@ object Graph {
     */
   private[graft] def supportEdges(s: SparkSession, dir: String): DataFrame = {
     // volume-relative support threshold folded in as a broadcast 1-row
-    // aggregate (VERDICT r13 #5): ceil-div in exact integers, same
-    // arithmetic as the former driver scalar
+    // aggregate: ceil-div in exact integers, no driver scalar
     val minSup = Tables.t(s, dir, "orders").agg(
       greatest(lit(CoreMinSupport.toLong),
         expr(s"(count(1) + ${SupportPerOrders - 1}) div $SupportPerOrders"))
@@ -455,23 +409,6 @@ object Graph {
     */
   private[queries] def minSupSql: String =
     s"GREATEST($CoreMinSupport, ((SELECT COUNT(*) FROM orders) + ${SupportPerOrders - 1}) // $SupportPerOrders)"
-
-  private[graft] def kCorePlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    var edges = supportEdges(s, dir)
-    for (_ <- 1 to CoreRounds) {
-      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= CoreK)
-        .select(col("src").as("node"))
-      edges = graft.plans.Checkpoint.truncate(
-        edges
-          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-    }
-    val out = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("core_deg"))
-      .orderBy(col("node"))
-    (out, Seq.empty)
-  }
 
   // every round CTE is MATERIALIZED: n_{i} is referenced twice by
   // round i+1, and a 12-level chain of twice-referenced inline CTEs
@@ -659,15 +596,15 @@ object Graph {
     * checkpoint-truncated per round ([[graft.plans.Checkpoint]]), the
     * star-CC discipline.
     */
-  def labelProp(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = labelPropPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
+  def labelProp(s: SparkSession, dir: String): DataFrame =
+    communities(lpaEdges(s, dir))
 
-  /** Lazy plan + pinned frames — audit surface and [[labelProp]] body. */
-  private[graft] def labelPropPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val edges = supportEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The pinned support edges [[labelProp]] and [[modularity]] walk. */
+  private def lpaEdges(s: SparkSession, dir: String): DataFrame =
+    graft.plans.Checkpoint.pin(supportEdges(s, dir))
+
+  /** (node, community, n_members) of [[LpaRounds]] synchronous rounds. */
+  private def communities(edges: DataFrame): DataFrame = {
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (r <- 1 to LpaRounds) {
@@ -683,10 +620,9 @@ object Graph {
       labels = if (r < LpaRounds) graft.plans.Checkpoint.truncate(next) else next
     }
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_members"))
-    val out = labels.join(sizes, "label")
+    labels.join(sizes, "label")
       .select(col("node"), col("label").as("community"), col("n_members"))
       .orderBy(col("node"))
-    (out, Seq(edges))
   }
 
   val labelPropOracle: String = {
@@ -726,42 +662,36 @@ object Graph {
     * Q sums the integer numerators (DECIMAL(38,0), exact) before its
     * own single division — no raw-double round() anywhere.
     *
-    * Scale shape: reuses [[labelPropPlan]]'s persisted edge relation
+    * Scale shape: reuses [[labelProp]]'s pinned edge relation
     * and node-sized label relation; two label joins onto the edges
     * (edge-sized), two hash aggregates to the community grid, and the
     * Q arithmetic on |communities| rows.
     */
   def modularity(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = modularityPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  private[graft] def modularityPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val (raw, pinned) = modularityRawPlan(s, dir)
-    // Signed-zero normalization (VERDICT r12 #1): 144 near-singleton
+    val raw = modularityRawPlan(s, dir)
+    // Signed-zero normalization: 144 near-singleton
     // communities at gate scale carry tiny NEGATIVE q_num (−1, −4, …
     // over E² ≈ 10¹⁰); DuckDB's round() preserves IEEE −0.0 while
     // Spark's (BigDecimal HALF_UP) has no signed zero — rows and
-    // schema matched but the driver's hash flipped on the sign bit
-    // for two rounds. `+ 0.0` is the IEEE identity for every value
+    // schema match but a row hash flips on the sign bit.
+    // `+ 0.0` is the IEEE identity for every value
     // EXCEPT −0.0 (−0.0 + 0.0 = +0.0), applied on BOTH engines so
     // the rendered zeros agree bit-for-bit.
-    val out = raw
+    raw
       .select(col("community"), col("n_members"),
         expr("e_sym DIV 2").as("internal_edges"), col("dsum").as("degree_sum"),
         (round(col("q_part0"), 6) + lit(0.0)).as("q_part"),
         (round(col("q0"), 6) + lit(0.0)).as("modularity"))
       .orderBy(col("community"))
-    (out, pinned)
   }
 
   /** Pre-round frame (q_num/q_den exact integers, q_part0/q0 the
     * single-division doubles) — RoundingAuditSpec's signed-zero and
     * boundary probe surface.
     */
-  private[graft] def modularityRawPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val (labels, pinned) = labelPropPlan(s, dir)
-    val edges = pinned.head
+  private[graft] def modularityRawPlan(s: SparkSession, dir: String): DataFrame = {
+    val edges = lpaEdges(s, dir)
+    val labels = communities(edges)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val byC = labels.select(col("node"), col("community"))
       .join(deg, col("node") === col("src")).drop("src")
@@ -779,10 +709,9 @@ object Graph {
     // E ≈ 3·10⁹; beyond that widen to DECIMAL(38,0) like the Q sum),
     // so the only float operation per row is ONE correctly-rounded
     // IEEE division — the gini/spearman recipe that both engines
-    // reproduce bit-identically, unlike the chained div/mul this
-    // replaced (r11's sole hash-mismatching gate).
+    // reproduce bit-identically, unlike a chained div/mul.
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    val out = byC
+    byC
       .join(internal, Seq("community"), "left")
       .select(col("community"), col("n_members"), col("dsum"),
         coalesce(col("e_sym"), lit(0L)).as("e_sym"))
@@ -797,7 +726,6 @@ object Graph {
         .cast(org.apache.spark.sql.types.DecimalType(38, 0))).over(wAll)
         .cast(org.apache.spark.sql.types.DoubleType) /
         col("q_den").cast(org.apache.spark.sql.types.DoubleType))
-    (out, pinned)
   }
 
   val modularityOracle: String = {
@@ -930,24 +858,17 @@ object Graph {
     * relations are node-sized and reused across sweeps.
     */
   def salsa(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = salsaPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  /** Lazy plan + pinned frames — audit surface and [[salsa]] body. */
-  private[graft] def salsaPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val orders = Tables.t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey").cast(LongType).as("c"))
     val li = Tables.t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey").cast(LongType).as("p"))
-    val trade = graft.plans.Checkpoint.truncate(
+    val trade = graft.plans.Checkpoint.pin(graft.plans.Checkpoint.truncate(
       orders.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("c"), col("p")).distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("c"), col("p")).distinct()))
     val outdeg = trade.groupBy(col("c")).agg(count(lit(1)).as("outdeg"))
     val indeg = trade.groupBy(col("p")).agg(count(lit(1)).as("indeg"))
     // hub-side node count folded in as a broadcast 1-row aggregate
-    // (VERDICT r13 #5): it seeds the uniform start mass ONCE, outside
+    // it seeds the uniform start mass ONCE, outside
     // the iteration, so no literal is required
     val nC = outdeg.agg(count(lit(1)).as("n_c"))
     var hub = outdeg.crossJoin(broadcast(nC))
@@ -961,12 +882,11 @@ object Graph {
         .select(col("c"), expr("a div indeg").as("contrib"))
         .groupBy(col("c")).agg(sum(col("contrib")).as("h"))
     }
-    val out = auth.select(lit("supplier").as("kind"), col("p").as("key"),
+    auth.select(lit("supplier").as("kind"), col("p").as("key"),
         col("a").as("score"))
       .unionByName(hub.select(lit("customer").as("kind"), col("c").as("key"),
         col("h").as("score")))
       .orderBy(col("score").desc, col("kind"), col("key"))
-    (out, Seq(trade))
   }
 
   // DuckDB SUM(BIGINT) → HUGEINT: cast each sweep back to BIGINT so
@@ -1010,13 +930,7 @@ object Graph {
     * node-sized aggregates.
     */
   def harmonic(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = harmonicPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  private[graft] def harmonicPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val edges = supportEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = graft.plans.Checkpoint.pin(supportEdges(s, dir))
     val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("n1"))
     val wedges = edges.select(col("src").as("w"), col("dst").as("a"))
       .join(edges.select(col("src").as("w"), col("dst").as("b")), "w")
@@ -1026,13 +940,12 @@ object Graph {
       .join(edges.select(col("src").as("node"), col("dst").as("nbr2")),
         Seq("node", "nbr2"), "left_anti")
       .groupBy(col("node")).agg(count(lit(1)).as("n2"))
-    val out = deg.join(hop2, Seq("node"), "left")
+    deg.join(hop2, Seq("node"), "left")
       .select(col("node"), col("n1"), coalesce(col("n2"), lit(0L)).as("n2"))
       .withColumn("harmonic",
         (col("n1") * 2L + col("n2"))
           .cast(org.apache.spark.sql.types.DoubleType) / lit(2.0))
       .orderBy(col("node"))
-    (out, Seq(edges))
   }
 
   val harmonicOracle: String =
@@ -1080,13 +993,7 @@ object Graph {
     * integers; no floats anywhere.
     */
   def kTruss(s: SparkSession, dir: String): DataFrame = {
-    val (result, pinned) = kTrussPlan(s, dir)
-    finalized(result, pinned: _*)
-  }
-
-  private[graft] def kTrussPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val edges = supportEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = graft.plans.Checkpoint.pin(supportEdges(s, dir))
     var und = edges.filter(col("src") < col("dst"))
     var lastSup: DataFrame = null
     for (_ <- 1 to TrussRounds) {
@@ -1111,11 +1018,10 @@ object Graph {
       .join(symF.select(col("src").as("b"), col("dst").as("w")), "w")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
-    val out = und
+    und
       .join(wedgeF, col("src") === col("a") && col("dst") === col("b"), "left")
       .select(col("src"), col("dst"), coalesce(col("sup"), lit(0L)).as("support"))
       .orderBy(col("src"), col("dst"))
-    (out, Seq(edges))
   }
 
   val kTrussOracle: String = {

@@ -211,7 +211,7 @@ object LlmVectors {
   private[graft] def nearDupCentroids(s: SparkSession, dir: String): DataFrame = {
     val base = emb(s, dir)
     // k = max(16, floor(sqrt(n))) folded in as a broadcast 1-row
-    // aggregate (the pageRank/salsa device, VERDICT r14 #3) — the seed
+    // aggregate (the pageRank/salsa device) — the seed
     // filter reads k as a column instead of a driver .count() literal
     val kRel = base.agg(greatest(lit(16L),
       floor(sqrt(count(lit(1)).cast("double"))).cast("long")).as("k"))
@@ -593,17 +593,15 @@ object LlmVectors {
   def semdedupKeep(s: SparkSession, dir: String): DataFrame = {
     val base = emb(s, dir)
     val cent = nearDupCentroids(s, dir)
-    // r19 (guide §5 reuse / the repo's repeated-lineage rule): ONE
+    // the repeated-lineage rule: ONE
     // ranked corpus×centroid assignment serves BOTH consumers — the
     // keep-rule's primary-cell similarity (rn = 1: csim IS the sim the
     // rank ordered on, same round(·,9) dot formula) and the candidate
-    // blocking (rn ≤ NearDupProbes). The r18 shape ran assignCells
-    // twice and rebuilt the Lloyd centroids twice (embedNearDup's
-    // internal nearDupCentroids call), i.e. two full corpus passes
-    // against the broadcast centroid table plus a duplicated quantizer
-    // training for one relation's worth of information.
-    // Tracked-persisted: n·probes narrow (id, cell, sim, rn) rows.
-    val ranked = DistRank.tracked(
+    // blocking (rn ≤ NearDupProbes), so assignCells and the Lloyd
+    // centroids run once: one corpus pass against the broadcast
+    // centroid table and one quantizer training.
+    // Pinned: n·probes narrow (id, cell, sim, rn) rows.
+    val ranked = graft.plans.Checkpoint.pin(
       assignCellsRanked(base, cent, NearDupProbes))
     val simToCent = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("sim").as("csim"))
@@ -1074,21 +1072,21 @@ object LlmVectors {
     val cos = dot(col("emb"), col("q_emb")) / (col("nrm") * col("q_nrm"))
     val wCand = Window.partitionBy(col("q_id"))
       .orderBy(round(col("cos"), 9).desc, col("vec_id"))
-    val cand = base.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cos)
-      .withColumn("crank", row_number().over(wCand))
-      .filter(col("crank") <= MmrPool)
-      .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("rel"),
-        col("emb"), col("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = cand.select(col("q_id"), col("vec_id").as("va"),
-        col("emb").as("ea"), col("nrm").as("na"))
-      .join(cand.select(col("q_id"), col("vec_id").as("vb"),
-        col("emb").as("eb"), col("nrm").as("nb")), "q_id")
-      .filter(col("va") =!= col("vb"))
-      .select(col("q_id"), col("va"), col("vb"),
-        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = graft.plans.Checkpoint.pin(
+      base.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+        .withColumn("cos", cos)
+        .withColumn("crank", row_number().over(wCand))
+        .filter(col("crank") <= MmrPool)
+        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("rel"),
+          col("emb"), col("nrm")))
+    val pairs = graft.plans.Checkpoint.pin(
+      cand.select(col("q_id"), col("vec_id").as("va"),
+          col("emb").as("ea"), col("nrm").as("na"))
+        .join(cand.select(col("q_id"), col("vec_id").as("vb"),
+          col("emb").as("eb"), col("nrm").as("nb")), "q_id")
+        .filter(col("va") =!= col("vb"))
+        .select(col("q_id"), col("va"), col("vb"),
+          round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("sim")))
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(round(col("margin"), 9).desc, col("vec_id"))
     // step 1: nothing picked, margin = rel
@@ -1117,13 +1115,10 @@ object LlmVectors {
           lit(i).as("pick_rank"))
       picked = graft.plans.Checkpoint.truncate(picked.unionByName(next))
     }
-    val out = picked
+    picked
       .select(col("q_id"), col("pick_rank"), col("vec_id"), col("rel"),
         round(col("margin"), 6).as("margin"))
       .orderBy(col("q_id"), col("pick_rank"))
-    val res = graft.plans.Checkpoint.truncate(out)
-    cand.unpersist(); pairs.unpersist()
-    res
   }
 
   val mmrRerankOracle: String = {

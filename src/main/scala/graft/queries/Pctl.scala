@@ -116,7 +116,7 @@ object Pctl {
     * INPUT CONTRACT: the sparse path scans `rows` THREE times
     * (bounds, bucket counts, candidate restriction) — free on a
     * column-pruned table scan; callers whose input is a join or other
-    * derived relation should `DistRank.tracked(...)` it first (the
+    * derived relation should `graft.plans.Checkpoint.pin(...)` it first (the
     * [[StatTests.brownForsythe]] pattern) so the build runs once.
     * The value expression must also be TOTAL under ANSI (no throwing
     * subexpression reachable on rows a join condition would exclude):
@@ -207,17 +207,17 @@ object Pctl {
       parts, qs, scale, bounded, countAs)
   }
 
-  /** Build-time enforcement of the sparse path's 3-scan INPUT CONTRACT
-    * (VERDICT r17 #2): the sparse device scans its input three times
+  /** Build-time enforcement of the sparse path's 3-scan INPUT CONTRACT:
+    * the sparse device scans its input three times
     * (bounds, bucket counts, candidate restriction) — free on a
-    * column-pruned scan or a tracked-persisted relation, silently 3×
-    * on an expensive unpersisted subplan. The input's OPTIMIZED plan
-    * (cache substitution applied, so a [[DistRank.tracked]] input
+    * column-pruned scan or a pinned relation, silently 3×
+    * on an expensive subplan nobody pinned. The input's OPTIMIZED plan
+    * (cache substitution applied, so a [[graft.plans.Checkpoint.pin]] input
     * bottoms out at an InMemoryRelation leaf) must contain no join,
     * aggregate, window, generator, sort or shuffle node; violations
     * fail at gate-construction time with the fix named, like the
     * PlanAuditSpec censuses fail at test time. PctlDistSpec pins both
-    * directions (a raw join input throws; the same input tracked
+    * directions (a raw join input throws; the same input pinned
     * passes).
     */
   private def requireOneScanInput(in: DataFrame): Unit = {
@@ -238,7 +238,7 @@ object Pctl {
     require(offenders.isEmpty,
       "Pctl sparse-path input contract: the device scans its input " +
         s"THREE times, but this input's plan contains ${offenders.distinct.mkString(", ")} — " +
-        "wrap the input in DistRank.tracked(...) (the brownForsythe " +
+        "wrap the input in graft.plans.Checkpoint.pin(...) (the brownForsythe " +
         "pattern) so the subplan materializes once, or use " +
         "distBounded if the value domain is corpus-size-independent")
   }

@@ -106,11 +106,11 @@ object QuantileOps {
     *   qcd    = (Q3 − Q1) / (Q3 + Q1)
     */
   def bowleySkew(s: SparkSession, dir: String): DataFrame = {
-    // tracked-persisted: the sparse percentile device scans its input
+    // pinned: the sparse percentile device scans its input
     // three times (bounds, bucket counts, candidate join) — fine on a
     // raw column-pruned scan, but this input is an orders⋈customer
     // JOIN, so it materializes once (the brownForsythe pattern)
-    val ord = DistRank.tracked(Tables.t(s, dir, "orders")
+    val ord = graft.plans.Checkpoint.pin(Tables.t(s, dir, "orders")
       .join(Tables.t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
@@ -259,7 +259,7 @@ object QuantileOps {
   def ansariBradley(s: SparkSession, dir: String): DataFrame = {
     val d0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val d12 = org.apache.spark.sql.types.DecimalType(38, 12)
-    val counts = DistRank.tracked(Tables.t(s, dir, "events")
+    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "events")
       .select(col("event_type"),
         round(col("value") * 100).cast("long").as("b"))
       .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c")))
@@ -483,21 +483,21 @@ object QuantileOps {
     * does.
     */
   def weightedPsi(s: SparkSession, dir: String): DataFrame = {
-    val counts = DistRank.tracked(Tables.t(s, dir, "documents")
+    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "documents")
       .select(col("source").as("t"), col("n_chars").as("b"),
         size(split(col("text"), " ")).cast("long").as("w"))
       .groupBy(col("t"), col("b")).agg(sum(col("w")).as("c")))
     val allB = counts.groupBy(col("b")).agg(sum(col("c")).as("l"))
     val types = counts.select(col("t")).distinct()
     // completed (source × length) grid with own and rest token mass —
-    // the psiDrift bounded-BNLJ grid shape; tracked: the fence device
+    // the psiDrift bounded-BNLJ grid shape; pinned: the fence device
     // and the binning pass both read it
-    val grid0 = DistRank.tracked(allB.crossJoin(broadcast(types))
+    val grid0 = graft.plans.Checkpoint.pin(allB.crossJoin(broadcast(types))
       .join(counts, Seq("t", "b"), "left")
       .select(col("t"), col("b"),
         coalesce(col("c"), lit(0L)).as("c_own"),
         (col("l") - coalesce(col("c"), lit(0L))).as("c_rest")))
-    val fences = DistRank.tracked(
+    val fences = graft.plans.Checkpoint.pin(
       Pctl.distHist(grid0, Seq("t"), "b", "c_rest",
           (1 to 9).map(i => s"f$i" -> i / 10.0),
           // bounded: the histogram IS the length domain — a

@@ -118,11 +118,9 @@ object Retrieval {
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
     // The lex list feeds BOTH the exemplar derivation and the final
     // fusion join; pinning it (≤ NQueries·TopK rows) stops the full
-    // BM25 postings plan from executing twice per run. Released after
-    // the checkpoint-truncated result below (the finalized() pattern).
-    val lex = bm25TopK(s, dir)
-      .select(col("qterm"), col("rank").as("lex_rank"), col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // BM25 postings plan from executing twice per run.
+    val lex = graft.plans.Checkpoint.pin(bm25TopK(s, dir)
+      .select(col("qterm"), col("rank").as("lex_rank"), col("doc_id")))
     val emb = LlmVectors.embRelation(s, dir)
     val exemplar = lex.filter(col("lex_rank") === 1)
       .join(emb.select(col("vec_id"), col("emb").as("q_emb"),
@@ -142,16 +140,13 @@ object Retrieval {
         coalesce(lit(1.0) / (lit(RrfK) + col("sem_rank")).cast("double"), lit(0.0))
     val wFused = Window.partitionBy(col("qterm"))
       .orderBy(round(col("rrf0"), 9).desc, col("doc_id"))
-    val fused = lex.join(sem, Seq("qterm", "doc_id"), "full_outer")
+    lex.join(sem, Seq("qterm", "doc_id"), "full_outer")
       .withColumn("rrf0", fusedScore)
       .withColumn("rank", row_number().over(wFused))
       .filter(col("rank") <= TopK)
       .select(col("qterm"), col("rank"), col("doc_id"),
         col("lex_rank"), col("sem_rank"), round(col("rrf0"), 6).as("rrf"))
       .orderBy(col("qterm"), col("rank"))
-    val out = graft.plans.Checkpoint.truncate(fused)
-    lex.unpersist()
-    out
   }
 
   val hybridRrfOracle: String =

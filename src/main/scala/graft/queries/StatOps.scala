@@ -63,9 +63,9 @@ object StatOps {
         col("o_custkey") === col("c_custkey"))
     // blocks feeds the sizes->tiles broadcast build AND the overlap
     // probe -- structurally different consumers, so without the
-    // tracked persist the broadcast build re-executes the whole
-    // prefix-sum device (the r18 dunn_test pattern)
-    val blocks = DistRank.tracked(DistRank.prefixLt(
+    // pin the broadcast build re-executes the whole
+    // prefix-sum device (the dunnTest shape)
+    val blocks = graft.plans.Checkpoint.pin(DistRank.prefixLt(
       seg.groupBy(col("c_mktsegment"), col("cents"))
         .agg(count(lit(1)).as("eq")),
       Seq("c_mktsegment"), "cents", Seq("eq")))
@@ -268,16 +268,15 @@ object StatOps {
   def spearman(s: SparkSession, dir: String): DataFrame = {
     val lines = Tables.t(s, dir, "lineitem")
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("y"))
-    // persisted: feeds both midrank histograms AND the final moment
+    // pinned: feeds both midrank histograms AND the final moment
     // join — one orders⋈lines pass instead of three
-    val xy = Tables.t(s, dir, "orders")
+    val xy = graft.plans.Checkpoint.pin(Tables.t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority").as("pri"),
         round(col("o_totalprice") * 100).cast(LongType).as("x"))
-      .join(lines, col("o_orderkey") === col("l_orderkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persist=false: both histograms aggregate the ALREADY-persisted
+      .join(lines, col("o_orderkey") === col("l_orderkey")))
+    // persist=false: both histograms aggregate the ALREADY-pinned
     // xy — re-reading that cache three times beats materializing two
-    // more cached copies (VERDICT r15 #5)
+    // more cached copies
     val rx = DistRank.midrank2(xy.select(col("pri"), col("x")),
       Seq("pri"), "x", persist = false)
       .select(col("pri"), col("x"), col("r2").as("rx"))
@@ -1208,9 +1207,8 @@ object StatOps {
           col("event_type") === "purchase", 1L).otherwise(0L)).as("resp"))
     // rn feeds two structurally different consumers (the 1-row max
     // aggregate's broadcast build and the decile projection) — without
-    // the tracked persist each re-executes the whole bucketed-rank
-    // device (r18 profile: four ~10 s repeats of the device stages)
-    val rn = DistRank.tracked(DistRank
+    // the pin each re-executes the whole bucketed-rank device
+    val rn = graft.plans.Checkpoint.pin(DistRank
       .rowNumber(users, Nil, "pre_vm", desc = true, Seq("user_id"), "rn"))
     // n = max(rn) reads the rank relation the device already persisted
     // (one cheap cached pass), instead of re-running the fact aggregate
@@ -1745,15 +1743,14 @@ object StatOps {
       .select(col("event_type").as("grp"),
         round(col("value") * 1000000).cast(LongType).as("vm"))
     // one fact pass; every later relation is histogram-sized
-    val histGV = ev.groupBy(col("grp"), col("vm"))
-      .agg(count(lit(1)).as("cg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val histGV = graft.plans.Checkpoint.pin(ev.groupBy(col("grp"), col("vm"))
+      .agg(count(lit(1)).as("cg")))
     // histV feeds two structurally different consumers (the per-group
     // rank-sum join and the tie aggregate, the latter re-executed by
-    // the broadcast build) — tracked-persist per the structurally-
+    // the broadcast build) — pinned per the structurally-
     // different-repeats rule so the prefix-sum device lineage runs
-    // once (the r18 dunnTest profile finding; same shape here)
-    val histV = DistRank.tracked(DistRank.prefixLt(
+    // once (the dunnTest shape)
+    val histV = graft.plans.Checkpoint.pin(DistRank.prefixLt(
       histGV.groupBy(col("vm")).agg(sum(col("cg")).as("eq")),
       Nil, "vm", Seq("eq"))
       .withColumn("r2", lit(2L) * col("eq_lt") + col("eq") + lit(1L)))

@@ -127,9 +127,9 @@ object StatTests {
   def brownForsythe(s: SparkSession, dir: String): DataFrame = {
     val d0 = DecimalType(38, 0)
     val d12 = DecimalType(38, 12)
-    // tracked-persisted: ord feeds the median device's histogram AND
+    // pinned: ord feeds the median device's histogram AND
     // the deviation aggregate — one orders-customer join, not two
-    val ord = DistRank.tracked(Tables.t(s, dir, "orders")
+    val ord = graft.plans.Checkpoint.pin(Tables.t(s, dir, "orders")
       .join(Tables.t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
@@ -140,10 +140,10 @@ object StatTests {
     val dev = ord.join(broadcast(med), "seg")
       .select(col("seg"), col("med"),
         abs(col("cents") * 2 - col("m2")).as("z2"))
-    // tracked-persisted: g feeds both the per-segment output AND the
-    // tot rollup — unpersisted, the ord scan + median device would
-    // re-execute per reference (the r16 psi_drift lesson)
-    val g = DistRank.tracked(dev.groupBy(col("seg"), col("med"))
+    // pinned: g feeds both the per-segment output AND the
+    // tot rollup — without the pin, the ord scan + median device would
+    // re-execute per reference
+    val g = graft.plans.Checkpoint.pin(dev.groupBy(col("seg"), col("med"))
       .agg(count(lit(1)).as("n"), sum(col("z2").cast(d0)).as("s"),
         sum((col("z2") * col("z2")).cast(d0)).as("q")))
     // per-group double terms, written once; Σ over groups rides dec12
@@ -1180,22 +1180,20 @@ object StatTests {
       .select(col("event_type").as("grp"),
         round(col("value") * 1000000).cast(LongType).as("vm"))
     // one fact pass; every later relation is histogram-sized
-    val histGV = ev.groupBy(col("grp"), col("vm"))
-      .agg(count(lit(1)).as("cg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val histGV = graft.plans.Checkpoint.pin(ev.groupBy(col("grp"), col("vm"))
+      .agg(count(lit(1)).as("cg")))
     // histV feeds TWO structurally different consumers (the per-group
     // rank-sum join and the tie aggregate), and g feeds FOUR (tot, the
     // probe side, the broadcast build, and through them the final
-    // select) — each unpersisted reference re-executes the whole
-    // prefix-sum device lineage as its own query stage (r18 profile:
-    // four near-identical ~12 s executor stages). Tracked-persist both
-    // per the structurally-different-repeats rule (DistRank.tracked
+    // select) — each reference re-executes the whole
+    // prefix-sum device lineage as its own query stage. Pin both
+    // per the structurally-different-repeats rule (Checkpoint.pin
     // scaladoc); they are distinct-value- and |groups|-sized.
-    val histV = DistRank.tracked(DistRank.prefixLt(
+    val histV = graft.plans.Checkpoint.pin(DistRank.prefixLt(
       histGV.groupBy(col("vm")).agg(sum(col("cg")).as("eq")),
       Nil, "vm", Seq("eq"))
       .withColumn("r2", lit(2L) * col("eq_lt") + col("eq") + lit(1L)))
-    val g = DistRank.tracked(
+    val g = graft.plans.Checkpoint.pin(
       histGV.join(histV.select(col("vm"), col("r2")), "vm")
         .groupBy(col("grp"))
         .agg(sum(col("cg")).as("n"), sum(col("r2").cast(d0) * col("cg")).as("s2")))
@@ -1479,9 +1477,9 @@ object StatTests {
   def moodMedian(s: SparkSession, dir: String): DataFrame = {
     val d0 = DecimalType(38, 0)
     val d12 = DecimalType(38, 12)
-    // tracked-persisted: ord feeds the grand-median histogram AND the
+    // pinned: ord feeds the grand-median histogram AND the
     // segment aggregate — one orders-customer join, not two
-    val ord = DistRank.tracked(Tables.t(s, dir, "orders")
+    val ord = graft.plans.Checkpoint.pin(Tables.t(s, dir, "orders")
       .join(Tables.t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
@@ -1489,10 +1487,10 @@ object StatTests {
         round(col("o_totalprice") * 100).cast(LongType).as("cents")))
     val med = Pctl.dist(ord, Nil, "cents", Seq("med" -> 0.5))
       .select((col("med") * 2).cast(LongType).as("m2"))
-    // tracked-persisted: g feeds the per-segment output AND the tot
-    // rollup — unpersisted, the ord scan + grand-median device would
-    // re-execute per reference (the r16 psi_drift lesson)
-    val g = DistRank.tracked(ord.crossJoin(broadcast(med))
+    // pinned: g feeds the per-segment output AND the tot
+    // rollup — without the pin, the ord scan + grand-median device would
+    // re-execute per reference
+    val g = graft.plans.Checkpoint.pin(ord.crossJoin(broadcast(med))
       .groupBy(col("seg"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("cents") * 2 > col("m2"), 1L).otherwise(0L)).as("hi"))

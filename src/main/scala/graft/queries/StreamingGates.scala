@@ -1068,14 +1068,14 @@ object StreamingGates {
     // relation is calendar-bounded — ≤744 rows/type at any corpus
     // size), so the buffering `percentile` aggregate is gone from
     // this gate too; same round-6 values by PctlDistSpec bit-equality.
-    // DELIBERATELY NOT tracked-persisted (r18, measured): the three
+    // DELIBERATELY NOT pinned (measured): the three
     // bars consumers repeat the IDENTICAL hourly aggregate, whose
     // shuffle ReuseExchange already deduplicates within the one
     // action — the fact is scanned once as-is, and adding the persist
     // measured 1.9× slower (0.82 → 1.53 s). Contrast outlierBounds,
     // whose three fact passes are structurally DIFFERENT subplans
     // (post-join aggregates) that ReuseExchange cannot unify — there
-    // the tracked histogram IS the one-fact-pass repair.
+    // the pinned histogram IS the one-fact-pass repair.
     val bars = hourlyBars(s, dir)
     val med = Pctl.distBounded(
       bars.select(col("event_type").as("m_type"), col("bar")),

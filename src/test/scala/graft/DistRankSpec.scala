@@ -128,70 +128,4 @@ class DistRankSpec extends SparkSpec {
       }
     }
   }
-
-  test("tracked/release scopes persists per thread (VERDICT r16 #4)") {
-    // two concurrently-built-and-materialized device queries must not
-    // evict each other's histograms: release() on one thread leaves
-    // the other thread's in-flight persists alone, so the one-pass
-    // cost contract holds under concurrency, not just under the
-    // mains' sequential per-query loop
-    import org.apache.spark.storage.StorageLevel
-    @volatile var dfA: DataFrame = null
-    @volatile var dfB: DataFrame = null
-    val latchTracked = new java.util.concurrent.CountDownLatch(2)
-    val latchChecked = new java.util.concurrent.CountDownLatch(1)
-    def worker(tag: Int, set: DataFrame => Unit, releaseMine: Boolean) =
-      new Thread(() => {
-        val df = DistRank.tracked(
-          longRows(500, 4, 37).withColumn("tag", lit(tag)))
-        df.count() // materialize the persist
-        set(df)
-        latchTracked.countDown()
-        latchChecked.await()
-        if (releaseMine) DistRank.release()
-      })
-    val ta = worker(1, dfA = _, releaseMine = false)
-    val tb = worker(2, dfB = _, releaseMine = true)
-    ta.start(); tb.start()
-    latchTracked.await()
-    assert(dfA.storageLevel === StorageLevel.MEMORY_AND_DISK)
-    assert(dfB.storageLevel === StorageLevel.MEMORY_AND_DISK)
-    latchChecked.countDown()
-    ta.join(); tb.join()
-    // B released its own scope; A's histogram must still be persisted
-    assert(dfB.storageLevel === StorageLevel.NONE,
-      "thread B's release must unpersist thread B's tracking")
-    assert(dfA.storageLevel === StorageLevel.MEMORY_AND_DISK,
-      "thread B's release must NOT evict thread A's in-flight persist")
-    // releasing from the MAIN thread warns and is a no-op for A's
-    // scope (the documented contract: release on the building thread);
-    // the cross-thread escape hatch is releaseAll (ADVICE r17) — it
-    // must evict A's residue even though A's thread is gone
-    DistRank.release() // foreign-thread release: warns, evicts nothing
-    assert(dfA.storageLevel === StorageLevel.MEMORY_AND_DISK,
-      "a foreign thread's release() must not evict A's persist")
-    DistRank.releaseAll()
-    assert(dfA.storageLevel === StorageLevel.NONE,
-      "releaseAll must evict persists from every thread's scope")
-  }
-
-  test("releaseAll evicts cross-thread residue; double release is harmless") {
-    import org.apache.spark.storage.StorageLevel
-    @volatile var pooled: DataFrame = null
-    val t = new Thread(() => {
-      pooled = DistRank.tracked(longRows(200, 2, 11))
-      pooled.count()
-    })
-    t.start(); t.join()
-    assert(pooled.storageLevel === StorageLevel.MEMORY_AND_DISK)
-    // the embedder pattern ADVICE r17 names: built on a pool thread,
-    // cleaned up from the caller — release() alone would be a silent
-    // no-op (it now warns); releaseAll reclaims the residue
-    DistRank.releaseAll()
-    assert(pooled.storageLevel === StorageLevel.NONE)
-    // idempotent: a second releaseAll and the pool thread's stale
-    // scope (if it ever released) must not throw
-    DistRank.releaseAll()
-    DistRank.release()
-  }
 }

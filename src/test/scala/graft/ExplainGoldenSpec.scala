@@ -21,7 +21,7 @@ class ExplainGoldenSpec extends SparkSpec {
     plan.sliding(marker.length).count(_ == marker)
 
   test("gr_triangles: both intermediates cached, no window, no nested loop") {
-    val plan = executed(graft.queries.Graph.coTrianglesPlan(spark, dir)._1)
+    val plan = executed(graft.queries.Graph.coTriangles(spark, dir))
     // pairs feeds deg + the orientation join; ed feeds both wedge
     // sides + the closing join — a lost persist re-runs the per-order
     // self-join per consumer (the exact r8 pagerank failure mode)
@@ -33,7 +33,7 @@ class ExplainGoldenSpec extends SparkSpec {
   }
 
   test("gr_pagerank: checkpoint-truncated edges under the cache, 5 cached iteration scans") {
-    val plan = executed(graft.queries.Graph.pageRankPlan(spark, dir)._1)
+    val plan = executed(graft.queries.Graph.pageRank(spark, dir))
     // the r8 23.9s regression was cache eviction re-running the
     // orders⋈lineitem edge build: the persisted relations must bottom
     // out at a checkpoint artifact (scan of an existing RDD), never at
@@ -95,7 +95,7 @@ class ExplainGoldenSpec extends SparkSpec {
   }
 
   test("gr_salsa: checkpoint-truncated trade build under the cache, cached sweep scans, no window") {
-    val plan = executed(graft.queries.Graph.salsaPlan(spark, dir)._1)
+    val plan = executed(graft.queries.Graph.salsa(spark, dir))
     // the persisted trade relation must bottom out at the checkpoint
     // artifact (pageRank's r8 lesson: a cache miss must re-read
     // blocks, never re-run the orders⋈lineitem distinct)
@@ -120,7 +120,7 @@ class ExplainGoldenSpec extends SparkSpec {
   }
 
   test("gr_label_prop: per-round checkpoints, cached edge scans, top-1 via group limit") {
-    val plan = executed(graft.queries.Graph.labelPropPlan(spark, dir)._1)
+    val plan = executed(graft.queries.Graph.labelProp(spark, dir))
     // rounds 1..n-1 are truncated: the final plan must read the
     // previous round as an artifact, not re-derive 3 rounds of joins
     assert(plan.contains("ExistingRDD"),

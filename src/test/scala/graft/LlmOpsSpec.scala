@@ -324,53 +324,48 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("cluster queries leave no persisted storage behind (VERDICT r3 #4)") {
+    // every pin and every local-checkpoint round of the iterative
+    // loops lives in this thread's Checkpoint scope, so a release after
+    // each call leaves executor storage and the CacheManager exactly
+    // empty, call after call (no GC timing involved)
+    graft.plans.Checkpoint.release()
     spark.catalog.clearCache()
-    // localCheckpoint blocks are reclaimed by the ContextCleaner on GC
-    // (asynchronously) — settle until the count is stable across a GC
-    // cycle before reading it
-    def storageCount: Int = {
-      var prev = -1
-      var cur = spark.sparkContext.getPersistentRDDs.size
-      var i = 0
-      while (cur != prev && i < 20) {
-        prev = cur
-        System.gc()
-        Thread.sleep(100)
-        cur = spark.sparkContext.getPersistentRDDs.size
-        i += 1
-      }
-      cur
-    }
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Int = {
+    Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      graft.queries.LlmDedup.dedupClusters, graft.queries.LlmDedup.dedupClusters,
+      graft.queries.LlmDedup.dedupClustersMinLabel,
+      graft.queries.LlmDedup.dedupClustersMinLabel).foreach { fn =>
       fn(spark, dir).collect()
-      storageCount
+      graft.plans.Checkpoint.release()
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"cluster query left storage behind: ${spark.sparkContext.getPersistentRDDs.keys}")
+      assert(spark.sharedState.cacheManager.isEmpty)
     }
-    // first call may populate the documented shingle memo (a single
-    // MEMORY_AND_DISK entry, evicted by clearCache/session stop); the
-    // iterative loops' own frames must all be released, so REPEATED
-    // calls cannot grow executor storage. Each leaked round would pin
-    // ~4 checkpoint entries per call; the +2 slack only absorbs the
-    // ContextCleaner's one-GC-cycle lag, not a real leak.
-    val after1 = run(graft.queries.LlmDedup.dedupClusters)
-    val counts = Seq(
-      run(graft.queries.LlmDedup.dedupClusters),
-      run(graft.queries.LlmDedup.dedupClusters),
-      run(graft.queries.LlmDedup.dedupClustersMinLabel),
-      run(graft.queries.LlmDedup.dedupClustersMinLabel))
-    assert(counts.last <= after1 + 2 && counts.max <= after1 + 2,
-      s"cluster queries accumulate storage: $after1 -> $counts")
+  }
+
+  test("one release frees everything a gate pinned or truncated; identical pins share an entry") {
+    // ops_spearman pins its orders⋈lines relation, gr_label_prop pins
+    // support edges over a truncated build and truncates its rounds,
+    // dd_ngram_jaccard pins the shingle and prefix relations: the
+    // mains' single Checkpoint.release() must free all of it
+    graft.plans.Checkpoint.release()
     spark.catalog.clearCache()
-    // the ContextCleaner reclaims blocks asynchronously; on a loaded box
-    // the stability heuristic above can settle on a nonzero count before
-    // the cleaner's queue drains (ADVICE r5) — poll for the exact zero
-    // with a generous deadline instead of reusing the heuristic
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    var n = spark.sparkContext.getPersistentRDDs.size
-    while (n != 0 && System.nanoTime() < deadline) {
-      System.gc(); Thread.sleep(250)
-      n = spark.sparkContext.getPersistentRDDs.size
+    // a second pin of a plan-identical frame shares the first one's entry
+    val a = graft.plans.Checkpoint.pin(spark.range(300).toDF("v"))
+    val b = graft.plans.Checkpoint.pin(spark.range(300).toDF("v"))
+    assert(a.count() === b.count())
+    assert(spark.sparkContext.getPersistentRDDs.size === 1,
+      "two pins of one plan must materialize one cached relation")
+    graft.plans.Checkpoint.release()
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    Seq("ops_spearman", "gr_label_prop", "dd_ngram_jaccard").foreach { name =>
+      SparkEntry.queries(name)(spark, dir).collect()
+      graft.plans.Checkpoint.release()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a CacheManager entry after release")
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"$name left persisted RDDs after release: ${spark.sparkContext.getPersistentRDDs.keys}")
     }
-    assert(n === 0, "clearCache must release the shingle memo too")
   }
 
   test("ANN plans never cross-join the corpus; topk broadcasts the query side") {

@@ -179,16 +179,16 @@ class PctlDistSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Pctl.dist(joined, Seq("g"), "v", Seq("p50" -> 0.5))
     }
-    assert(e.getMessage.contains("DistRank.tracked"),
+    assert(e.getMessage.contains("Checkpoint.pin"),
       s"the contract violation must name the fix: ${e.getMessage.take(300)}")
-    // ...while the SAME input tracked-persisted (the brownForsythe
-    // pattern) passes: cache substitution bottoms the plan out at an
+    // ...while the SAME input pinned (the brownForsythe pattern)
+    // passes: cache substitution bottoms the plan out at an
     // InMemoryRelation leaf, and results match the aggregate
-    val tracked = graft.queries.DistRank.tracked(joined)
+    val pinned = graft.plans.Checkpoint.pin(joined)
     try {
-      assertSame(Pctl.dist(tracked, Seq("g"), "v", Seq("p50" -> 0.5)),
-        aggForm(tracked, Seq("g"), Seq("p50" -> 0.5)), Seq("g"))
-    } finally graft.queries.DistRank.release()
+      assertSame(Pctl.dist(pinned, Seq("g"), "v", Seq("p50" -> 0.5)),
+        aggForm(pinned, Seq("g"), Seq("p50" -> 0.5)), Seq("g"))
+    } finally graft.plans.Checkpoint.release()
     // raw scans/projections (the common gate shape) stay accepted —
     // every other test in this spec builds on spark.range projections
   }
@@ -205,7 +205,7 @@ class PctlDistSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Pctl.dist(withSub, Seq("g"), "v", Seq("p50" -> 0.5))
     }
-    assert(e.getMessage.contains("DistRank.tracked"),
+    assert(e.getMessage.contains("Checkpoint.pin"),
       s"subquery input must violate the contract: ${e.getMessage.take(300)}")
     spark.catalog.dropTempView("pctl_sub_main")
     spark.catalog.dropTempView("pctl_sub_ref")

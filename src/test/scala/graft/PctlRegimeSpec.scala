@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact-Percentile census pins where the BUFFERING aggregate may
   * appear (plan-level, catches `expr("percentile(...)")` however it
   * is spelled), and Pctl's build-time input contract rejects sparse-
-  * path inputs that are neither scans nor tracked-persisted. This
+  * path inputs that are neither scans nor pinned. This
   * spec pins the DataFrame devices at the SOURCE level, so a new call
   * site fails even when its plan happens to audit clean.
   */
@@ -32,9 +32,9 @@ class PctlRegimeSpec extends AnyFunSuite {
   private val declared: Map[String, Map[String, Int]] = Map(
     // brownForsythe + moodMedian: o_totalprice cents — a near-distinct
     // fact domain → sparse dist; inputs are orders⋈customer joins,
-    // DistRank.tracked per the 3-scan input contract
+    // Checkpoint.pin per the 3-scan input contract
     "queries/StatTests.scala" -> Map("dist" -> 2),
-    // bowleySkew: the same near-distinct cents domain, tracked join
+    // bowleySkew: the same near-distinct cents domain, pinned join
     // input (dist); tukeyFences/qqDeciles(×2)/lenProfile/lengthFilter:
     // 2-dp event values resp. document-length counts — corpus-size-
     // independent domains (distBounded); tokenWeightedLen: weighted
@@ -52,7 +52,7 @@ class PctlRegimeSpec extends AnyFunSuite {
     // histogramEqui bounds: 2-dp event values (distBounded);
     // psiDrift fences: rest counts are grid algebra over the 2-dp
     // bucket domain (distHist bounded); outlierBounds med + MAD (r18):
-    // one tracked (type, 2-dp value) histogram feeds both — weighted
+    // one pinned (type, 2-dp value) histogram feeds both — weighted
     // medians on the bounded domain (distHist bounded ×2)
     "queries/DataOps.scala" -> Map("distBounded" -> 1, "distHist" -> 3),
     // trimmedMean fences: 2-dp event values (distBounded)

@@ -215,40 +215,24 @@ class PlanAuditSpec extends SparkSpec {
 
   // the oracle-less bench-only twins stay under the same plan audit:
   // they run in every bench even though they left the correctness map
-  // the graph family's public queries finalize through an eager
-  // checkpoint + unpersist (self-releasing persists, VERDICT r9 #3), so
-  // their registered plans bottom out at a LogicalRDD; audit the lazy
-  // *Plan siblings instead — the REAL dataflow the checkpoint executes
-  private val lazySiblings: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map(
-      "gr_pagerank" -> ((s, d) => graft.queries.Graph.pageRankPlan(s, d)._1),
-      "gr_khop" -> ((s, d) => graft.queries.Graph.kHopPlan(s, d)._1),
-      "gr_triangles" -> ((s, d) => graft.queries.Graph.coTrianglesPlan(s, d)._1),
-      "gr_salsa" -> ((s, d) => graft.queries.Graph.salsaPlan(s, d)._1),
-      "gr_label_prop" -> ((s, d) => graft.queries.Graph.labelPropPlan(s, d)._1),
-      "gr_modularity" -> ((s, d) => graft.queries.Graph.modularityPlan(s, d)._1),
-      "gr_harmonic" -> ((s, d) => graft.queries.Graph.harmonicPlan(s, d)._1),
-      "gr_ktruss" -> ((s, d) => graft.queries.Graph.kTrussPlan(s, d)._1),
-    )
-
   private def auditSurface: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-    (SparkEntry.queries ++ SparkEntry.benchOnlyDefs.map(d => d.name -> d.fn)
-      ++ lazySiblings).toSeq
+    (SparkEntry.queries ++ SparkEntry.benchOnlyDefs.map(d => d.name -> d.fn)).toSeq
 
   /** Build a gate's QueryExecution against an EMPTY cache: several
-    * gates register tracked persists (DistRank histograms, shared
-    * fence/pooled relations) at plan-BUILD time, and cache
+    * gates pin relations (DistRank histograms, shared fence/pooled
+    * relations) at plan-BUILD time, and cache
     * substitution would then fold those subplans into opaque
     * InMemoryRelation leaves — hiding exactly the windows, joins and
     * aggregates these audits exist to count, both within a gate and
     * across alphabetically-later gates (r16). Releasing before the
     * plan is resolved keeps every audit hermetic and the censuses
     * exact; the runtime caching behavior is unchanged (Verify/Bench
-    * release AFTER materializing, per gate).
+    * release AFTER materializing, per gate). Planning never reads the
+    * released local-checkpoint blocks, so the plan stays auditable.
     */
   private def freshQe(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.QueryExecution = {
     val df = fn(spark, dir)
-    graft.queries.DistRank.release()
+    graft.plans.Checkpoint.release()
     spark.catalog.clearCache()
     df.queryExecution
   }
@@ -569,7 +553,7 @@ class PlanAuditSpec extends SparkSpec {
     "ops_ansari_bradley" -> 1,
     // permutation p-value: the pooled leg's bucket carry appears in
     // both the observed-statistic (r = 0) and the tail (r >= 1)
-    // readouts of the tracked `stats` relation
+    // readouts of the pinned `stats` relation
     "ops_cvm_permutation" -> 2, "ops_cvmperm_xxhash" -> 2)
 
   test("unpartitioned windows appear only over bounded grid relations (exact census)") {
@@ -645,7 +629,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("madAnomaly's repeated identical bar aggregate deduplicates via ReusedExchange (no persist needed)") {
-    // r18 measured: tracked-persisting the hourly-bar aggregate was
+    // measured: pinning the hourly-bar aggregate was
     // 1.9× SLOWER because its three consumers repeat the IDENTICAL
     // subplan, whose shuffle ReuseExchange unifies at runtime — this
     // pin keeps the one-fact-pass property mechanical so a refactor
@@ -660,7 +644,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("ReusedExchange"),
       "the three bars consumers must share one exchange; if this " +
         "fails, either the subplans drifted apart (re-unify them or " +
-        "DistRank.tracked the bars) or the planner stopped reusing")
+        "Checkpoint.pin the bars) or the planner stopped reusing")
   }
 
   test("rank-filter windows get the group-limit optimization (top-k never sorts full partitions)") {

@@ -130,7 +130,7 @@ class RoundingAuditSpec extends SparkSpec {
     // with negative exact numerators whose quotient rounds to zero —
     // without sign normalization these render -0.0 in DuckDB, +0.0 in
     // Spark (the two-round red gate)
-    val (raw, _) = Graph.modularityRawPlan(spark, gateDir)
+    val raw = Graph.modularityRawPlan(spark, gateDir)
     val hazard = raw
       .filter(col("q_num") < 0 && round(col("q_part0"), 6) === 0.0)
     assert(hazard.count() > 0,
