@@ -133,7 +133,7 @@ object DataOps {
     val li = Tables.t(s, dir, "events")
       .select(col("event_type").as("grp"), col("value").as("v"))
     // events.value is a 2-dp domain: distinct values are corpus-size-
-    // independent (the distBounded envelope), so the histogram is the
+    // independent (the bounded-regime envelope), so the histogram is the
     // cheapest relation in the query — pinned: it feeds the median
     // device, the MAD fold and the fence count
     val hist = graft.plans.Checkpoint.pin(
@@ -340,8 +340,8 @@ object DataOps {
     */
   def winsorize(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.t(s, dir, "events")
-    val bounds = Pctl.distBounded(ev, Seq("event_type"), "value",
-      Seq("p05" -> 0.05, "p95" -> 0.95))
+    val bounds = Pctl.dist(ev, Seq("event_type"), "value",
+      Seq("p05" -> 0.05, "p95" -> 0.95), bounded = true)
     ev.select(col("event_id"), col("event_type"), col("value"))
       .join(broadcast(bounds), "event_type")
       .select(col("event_id"), col("event_type"),

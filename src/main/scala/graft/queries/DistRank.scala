@@ -1,26 +1,25 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The shared distributed-rank device: exact ranks,
-  * midranks and cumulative counts WITHOUT a global ordered window.
+/** The shared distributed-rank device: exact ranks, midranks,
+  * cumulative counts and the order-statistic positions of
+  * [[Pctl.dist]]'s sparse path, WITHOUT a global ordered window (a
+  * `rank()/row_number() OVER (ORDER BY v)` on a fact-sized relation
+  * plans as a single-partition WindowExec: one reducer sorts
+  * everything). All of them are built on ONE skeleton, [[bucketed]],
+  * the only code that knows the bucket function and the carry.
   *
-  * A `rank()/row_number() OVER (ORDER BY v)` on a fact-sized relation
-  * plans as a single-partition WindowExec — one reducer sorts
-  * everything, the scale-killer class behind WindowExec spill
-  * warnings. This device is the
-  * two-level prefix-sum decomposition [[StreamingGates.concurrency]]
-  * already ships (per-day partitioned sums + day-level carry),
-  * generalized: rows are assigned a BUCKET by a monotone function of
-  * the sort key, per-bucket ordered windows compute local prefixes in
-  * parallel, and a carry over the tiny (groups × ≤buckets) totals
-  * relation stitches the global number back together. Every quantity
-  * is an exact integer count, so the result is BIT-IDENTICAL to the
-  * window form (DistRankSpec proves it on randomized data; the DuckDB
-  * oracles of every migrated gate are unchanged).
+  * The decomposition generalizes [[StreamingGates.concurrency]]'s
+  * per-day sums + day-level carry: rows get a BUCKET by a monotone
+  * function of the sort key, per-bucket ordered windows compute local
+  * prefixes in parallel, and a carry over the tiny (groups × ≤ buckets)
+  * totals relation stitches the global number back together. Every
+  * quantity is an exact integer count, so the result is BIT-IDENTICAL
+  * to the window form (DistRankSpec, on randomized data).
   *
   * Monotonicity of the bucket function is the whole correctness
   * argument: equal keys land in one bucket and smaller keys never land
@@ -35,8 +34,7 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: one exact min/max aggregate per group (map-combined),
   * broadcast back; per-bucket sorts touch |distinct|/B rows each; the
-  * carry window runs over ≤ |groups|·B rows. At 100 TB nothing sorts
-  * more than one bucket per task, and B is a knob.
+  * carry window runs over ≤ |groups|·B rows.
   */
 object DistRank {
 
@@ -61,12 +59,8 @@ object DistRank {
   private def idiv(a: Column, d: Column): Column =
     ((a - pmod(a, d)).cast(DoubleType) / d.cast(DoubleType)).cast(LongType)
 
-  /** Monotone bucket id for `v` given the group's exact [lo, hi].
-    * `private[queries]`: [[Pctl.dist]]'s sparse straddle device uses
-    * the same bucket function so its bucket-level cumulative agrees
-    * with this device's decomposition.
-    */
-  private[queries] def bucketOf(v: Column, lo: Column, hi: Column, dt: DataType): Column =
+  /** Monotone bucket id for `v` given the group's exact [lo, hi]. */
+  private def bucketOf(v: Column, lo: Column, hi: Column, dt: DataType): Column =
     dt match {
       case DoubleType | FloatType =>
         when(hi <= lo, lit(0L)).otherwise(
@@ -80,71 +74,83 @@ object DistRank {
         idiv(v.cast(LongType) - lo.cast(LongType), width)
     }
 
+  /** The skeleton. For each named sum `c -> e` over `df`: one
+    * aggregate per group computes [min v, max v] and the group's Σ e,
+    * broadcast back to tag every row with `__b = bucketOf(v)`; one
+    * aggregate per (parts, __b) computes the bucket's Σ e, and one
+    * window over that small relation its exclusive carry.
+    *
+    * Returns `(rows, carry)`: `rows` is `df` plus `__b`; `carry` has one
+    * row per (parts, __b) with `__tot_c` (the bucket's Σ e),
+    * `__carry_c` (Σ e over the group's earlier buckets) and `__gtot_c`
+    * (the group's Σ e). A consumer adds its own window over
+    * [[inBucket]] and joins what it reads of `carry` back on
+    * (parts, __b); the optimizer prunes every aggregate it does not
+    * read.
+    */
+  private[queries] def bucketed(df: DataFrame, parts: Seq[String], v: String,
+                                sums: Seq[(String, Column)]): (DataFrame, DataFrame) = {
+    val pc = parts.map(col)
+    val bounds = df.groupBy(pc: _*)
+      .agg(min(col(v)).as("__lo"), (max(col(v)).as("__hi") +:
+        sums.map { case (c, e) => sum(e).as(s"__gtot_$c") }): _*)
+    // group bounds are a |groups|-row (or 1-row) aggregate — the
+    // broadcast-1-row folding device
+    val rows =
+      (if (parts.isEmpty) df.crossJoin(broadcast(bounds))
+       else df.join(broadcast(bounds), parts))
+        .withColumn("__b", bucketOf(col(v), col("__lo"), col("__hi"), df.schema(v).dataType))
+        .drop("__lo", "__hi")
+    val totAggs = sums.flatMap { case (c, e) =>
+      Seq(sum(e).as(s"__tot_$c"), min(col(s"__gtot_$c")).as(s"__gtot_$c")) }
+    val totals = rows.groupBy((pc :+ col("__b")): _*).agg(totAggs.head, totAggs.tail: _*)
+    // with no parts a constant partition key keeps the carry window
+    // single-partition over ≤ Buckets rows, outside the fact-sized-
+    // window class
+    val carryParts = if (parts.isEmpty) Seq(lit(0)) else pc
+    val wCarry = Window.partitionBy(carryParts: _*).orderBy(col("__b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val carry = sums.foldLeft(totals) { case (d, (c, _)) =>
+      d.withColumn(s"__carry_$c", coalesce(sum(col(s"__tot_$c")).over(wCarry), lit(0L))) }
+    (rows.drop(sums.map { case (c, _) => s"__gtot_$c" }: _*), carry)
+  }
+
+  /** The window over one bucket of one group: no task sorts more. */
+  private[queries] def inBucket(parts: Seq[String]): WindowSpec =
+    Window.partitionBy((parts.map(col) :+ col("__b")): _*)
+
+  /** Σ `c` over the same bucket's rows with STRICTLY SMALLER `v`. */
+  private[queries] def inBucketLt(parts: Seq[String], v: String, c: String): Column =
+    coalesce(sum(col(c)).over(inBucket(parts).orderBy(col(v))
+      .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
   /** For each row of `df` — REQUIRED distinct on (parts, v), i.e. a
     * value histogram — appends, for every listed Long column c, a
     * column `<c>_lt` = Σ c over rows of the same `parts` group with
-    * STRICTLY SMALLER `v`. This is the exclusive prefix sum ordered by
-    * v, computed with the bucketed two-level decomposition: no task
-    * ever sorts more than one bucket.
+    * STRICTLY SMALLER `v`: the exclusive prefix sum ordered by v, on
+    * the [[bucketed]] skeleton.
     *
     * From `<c>_lt` of a count column the whole rank algebra follows
     * exactly: rank_min = cnt_lt + 1, and the doubled midrank
     * 2·rank_avg = 2·rank_min + ties − 1 = 2·cnt_lt + cnt_eq + 1
     * (the [[StatOps.spearman]] integer carry).
-    */
-  /** With `groupTotals = true`, additionally appends `<c>_tot` — the
-    * per-group total of each sum column — computed inside the SAME
-    * bounds aggregate and delivered by the SAME broadcast join, so
-    * callers needing the group size (the [[Pctl.dist]] rank-position
-    * arithmetic) pay zero extra jobs for it.
+    *
+    * The input feeds three subplans (bounds, local windows, bucket
+    * totals), so it is pinned (distinct-value-sized) unless
+    * `persist = false`: for inputs already pinned or cheap to rebuild.
     */
   def prefixLt(df0: DataFrame, parts: Seq[String], v: String,
-               sumCols: Seq[String], persist: Boolean = true,
-               groupTotals: Boolean = false): DataFrame = {
-    // the input histogram feeds three subplans (bounds, local windows,
-    // bucket totals); persisting it keeps the device at ONE pass over
-    // whatever fact relation produced it. Distinct-value-sized — the
-    // cheapest relation in the query.
-    // persist=false is for callers whose input is ALREADY cached (or
-    // aggregate-cheap to recompute): the three subplans then re-read
-    // the caller's cache instead of materializing a second copy.
+               sumCols: Seq[String], persist: Boolean = true): DataFrame = {
     val df = if (persist) graft.plans.Checkpoint.pin(df0) else df0
-    val pc = parts.map(col)
-    val vType = df.schema(v).dataType
-    val totAggs = if (groupTotals) sumCols.map(c => sum(col(c)).as(s"${c}_tot"))
-                  else Nil
-    val bounds = (if (parts.isEmpty) df.groupBy() else df.groupBy(pc: _*))
-      .agg(min(col(v)).as("__lo"),
-        (max(col(v)).as("__hi") +: totAggs): _*)
-    // group bounds are a |groups|-row (or 1-row) aggregate — the
-    // broadcast-1-row folding device
-    val withB =
-      (if (parts.isEmpty) df.crossJoin(broadcast(bounds))
-       else df.join(broadcast(bounds), parts))
-        .withColumn("__b", bucketOf(col(v), col("__lo"), col("__hi"), vType))
-        .drop("__lo", "__hi")
-    // level 1: per-bucket exclusive prefix — parallel ordered windows
-    val wLoc = Window.partitionBy((pc :+ col("__b")): _*).orderBy(col(v))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = sumCols.foldLeft(withB)((d, c) =>
-      d.withColumn(s"__loc_$c", coalesce(sum(col(c)).over(wLoc), lit(0L))))
-    // level 2: bucket totals + carry over the tiny totals relation
-    val totals = withB.groupBy((pc :+ col("__b")): _*)
-      .agg(sum(col(sumCols.head)).as(s"__tot_${sumCols.head}"),
-        sumCols.tail.map(c => sum(col(c)).as(s"__tot_$c")): _*)
-    // the carry window runs over the tiny totals relation; with no
-    // parts a constant partition key keeps the plan single-partition
-    // (≤ Buckets rows) WITHOUT the fact-sized-window warning class
-    val carryParts = if (parts.isEmpty) Seq(lit(0)) else pc
-    val wCarry = Window.partitionBy(carryParts: _*).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = sumCols.foldLeft(totals)((d, c) =>
-        d.withColumn(s"__carry_$c", coalesce(sum(col(s"__tot_$c")).over(wCarry), lit(0L))))
-      .select((pc :+ col("__b")) ++ sumCols.map(c => col(s"__carry_$c")): _*)
-    val joined = local.join(broadcast(carry), parts :+ "__b")
-    val out = sumCols.foldLeft(joined)((d, c) =>
-      d.withColumn(s"${c}_lt", col(s"__loc_$c") + col(s"__carry_$c")))
-    out.drop("__b" +: sumCols.flatMap(c => Seq(s"__loc_$c", s"__carry_$c")): _*)
+    val (rows, carry) = bucketed(df, parts, v, sumCols.map(c => c -> col(c)))
+    val local = sumCols.foldLeft(rows)((d, c) =>
+      d.withColumn(s"__loc_$c", inBucketLt(parts, v, c)))
+    val joined = local.join(
+      broadcast(carry.select(((parts :+ "__b") ++ sumCols.map(c => s"__carry_$c")).map(col): _*)),
+      parts :+ "__b")
+    sumCols.foldLeft(joined)((d, c) =>
+        d.withColumn(s"${c}_lt", col(s"__loc_$c") + col(s"__carry_$c")))
+      .drop("__b" +: sumCols.flatMap(c => Seq(s"__loc_$c", s"__carry_$c")): _*)
   }
 
   /** Value histogram of `rows` with the doubled-midrank carry: one row
@@ -168,41 +174,26 @@ object DistRank {
   }
 
   /** Exact `row_number() OVER (PARTITION BY parts ORDER BY v [DESC],
-    * tieBreaks...)` as column `out`, bucketed on v: the per-bucket
-    * window sorts (v, tieBreaks), the carry adds the count of rows in
-    * earlier buckets. For DESC ordering the key is negated (exact for
-    * the integral keys this device serves), so the bucket function
-    * stays "ascending on the effective key".
+    * tieBreaks...)` as column `out`, on the [[bucketed]] skeleton with a
+    * unit weight: the per-bucket window numbers (v, tieBreaks), the
+    * carry adds the count of rows in earlier buckets. For DESC ordering
+    * the key is negated (exact for the integral keys this device
+    * serves), so the bucket function stays "ascending on the effective
+    * key". The input is pinned for the same three-subplan reuse as
+    * [[prefixLt]].
     */
   def rowNumber(df: DataFrame, parts: Seq[String], v: String, desc: Boolean,
                 tieBreaks: Seq[String], out: String): DataFrame = {
     val eff = if (desc) "__negv" else v
-    // persisted for the same three-subplan reuse as [[prefixLt]]
-    val base0 = graft.plans.Checkpoint.pin(
+    val base = graft.plans.Checkpoint.pin(
       if (desc) df.withColumn("__negv", -col(v)) else df)
-    val pc = parts.map(col)
-    val vType = base0.schema(eff).dataType
-    val bounds = (if (parts.isEmpty) base0.groupBy() else base0.groupBy(pc: _*))
-      .agg(min(col(eff)).as("__lo"), max(col(eff)).as("__hi"))
-    val withB =
-      (if (parts.isEmpty) base0.crossJoin(broadcast(bounds))
-       else base0.join(broadcast(bounds), parts))
-        .withColumn("__b", bucketOf(col(eff), col("__lo"), col("__hi"), vType))
-        .drop("__lo", "__hi")
-    val wLoc = Window.partitionBy((pc :+ col("__b")): _*)
-      .orderBy(col(eff) +: tieBreaks.map(col): _*)
-    val local = withB.withColumn("__lr", row_number().over(wLoc))
-    val totals = withB.groupBy((pc :+ col("__b")): _*)
-      .agg(count(lit(1)).as("__c"))
-    val carryParts = if (parts.isEmpty) Seq(lit(0)) else pc
-    val wCarry = Window.partitionBy(carryParts: _*).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = totals
-      .withColumn("__carry", coalesce(sum(col("__c")).over(wCarry), lit(0L)))
-      .select((pc :+ col("__b")) :+ col("__carry"): _*)
-    local.join(broadcast(carry), parts :+ "__b")
-      .withColumn(out, col("__carry") + col("__lr"))
-      .drop("__b", "__lr", "__carry", "__negv")
+    val (rows, carry) = bucketed(base, parts, eff, Seq("n" -> lit(1L)))
+    rows.withColumn("__lr",
+        row_number().over(inBucket(parts).orderBy(col(eff) +: tieBreaks.map(col): _*)))
+      .join(broadcast(carry.select((parts :+ "__b" :+ "__carry_n").map(col): _*)),
+        parts :+ "__b")
+      .withColumn(out, col("__carry_n") + col("__lr"))
+      .drop("__b", "__lr", "__carry_n", "__negv")
   }
 
   /** SQL-standard `ntile(k)` from a 1-based row_number `rn` and the

@@ -66,7 +66,7 @@ object EdfOps {
     // over the grid (exact integers, same values as the former pooled
     // prefix leg by construction; every oracle is unchanged). The
     // per-partition sort is |2-dp value domain| rows, bounded by the
-    // value range, not the corpus (the [[Pctl.distBounded]] argument).
+    // value range, not the corpus (the [[Pctl.dist]] bounded-regime argument).
     val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "events")
       .select(col("event_type"), round(col("value") * 100).cast(LongType).as("b"))
       .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c")))
@@ -469,7 +469,7 @@ object EdfOps {
     *     in the same sort; keeping only the grid rows yields the
     *     completed cumulative grid with zero joins.
     * The per-partition sort is |2-dp value domain| rows — bounded by
-    * the value range, not the corpus (the [[Pctl.distBounded]]
+    * the value range, not the corpus (the [[Pctl.dist]] bounded-regime
     * argument); shuffle volume is ≤ 2·(R+1)·|grid| map-combined rows,
     * never R·|fact| wide rows, and the only fact-proportional work is
     * the hash projection + membership filter itself.

@@ -1,50 +1,101 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType,
   IntegerType, LongType, ShortType}
 
-/** The ONE exact-percentile recipe (VERDICT r11 #7): every gate that
-  * reads an interpolated percentile goes through this pair, so a new
-  * gate cannot introduce a divergent rounding variant. Both engines
-  * use linear interpolation at rank q·(n−1): Spark's `percentile`
-  * (exact, sort-based) and DuckDB's `quantile_cont`; rounding to a
-  * fixed scale BEFORE any comparison or ranking keeps interpolation
-  * ulps out of the hash compare (the repo-wide float policy,
+/** The ONE exact-percentile recipe: every gate that reads an
+  * interpolated percentile goes through this object, so a new gate
+  * cannot introduce a divergent rounding variant. Both engines use
+  * linear interpolation at rank q·(n−1): Spark's `percentile` (exact,
+  * sort-based) and DuckDB's `quantile_cont`; rounding to a fixed scale
+  * BEFORE any comparison or ranking keeps interpolation ulps out of
+  * the hash compare (the repo-wide float policy,
   * [[LlmCuration.dsirWeights]]).
   *
-  * ==Device choice — the decision table (VERDICT r17 #3)==
+  * ==Regime choice — the decision table==
   *
-  * Four exact-percentile devices coexist on this surface; each wins
-  * in exactly one regime, measured in r16/r17 benches. Pick by the
-  * GROUP's row-domain, not by taste — every existing call site is
-  * pinned to its documented regime by PctlRegimeSpec, so a new call
-  * must name its regime there:
+  * Each regime wins in exactly one shape of group. Pick by the GROUP's
+  * row-domain, not by taste — every call site is pinned to its regime
+  * by PctlRegimeSpec, so a new call must name its regime there:
   *
-  *  - '''buffering `percentile` aggregate''' ([[p]]/[[pArray]]) —
-  *    groups provably GRID-SIZED (calendar²-bounded pair grids,
-  *    ≤ ~300k rows/group at ANY corpus size). The
-  *    TypedImperativeAggregate buffers every group value, which is
-  *    fine there and measured 1.3–1.8× FASTER than any histogram
-  *    device (r17: ops_sen_slope / st_trend_mk stay put). Censused in
-  *    PlanAuditSpec.percentileAggAllowed — fact-sized groups fail the
-  *    audit.
-  *  - '''[[distBounded]]''' (one per-group histogram window) — value
-  *    DOMAIN corpus-size-independent (2-dp cent buckets, 1..50
-  *    quantities, length counts): the histogram is domain-sized, so
-  *    one partitioned sort over it is safe at any corpus size.
-  *    Cheapest device: zero broadcasts, zero persists, one shuffle.
-  *  - '''[[dist]] (sparse straddle)''' — NEAR-DISTINCT fact domains
-  *    (raw doubles, prices in cents at corpus scale): nothing
-  *    fact-sized is shuffled, persisted or sorted; three column-pruned
-  *    input scans (see the INPUT CONTRACT below — enforced at build
-  *    time).
+  *  - '''buffering `percentile` aggregate''' ([[p]]) — groups provably
+  *    GRID-SIZED (calendar²-bounded pair grids, ≤ ~300k rows/group at
+  *    ANY corpus size). The TypedImperativeAggregate buffers every
+  *    group value, which is fine there and measured 1.3–1.8× faster
+  *    than any histogram regime (ops_sen_slope / st_trend_mk).
+  *    Censused in PlanAuditSpec.percentileAggAllowed — fact-sized
+  *    groups fail the audit.
+  *  - '''[[dist]] with `bounded = true`''' — grouped calls whose value
+  *    DOMAIN is corpus-size-independent (2-dp cent buckets, 1..50
+  *    quantities, length counts): the cumulative counts come from ONE
+  *    partitioned window over the per-group histogram, which is
+  *    domain-sized, so one sort per group is safe at any corpus size.
+  *    Cheapest regime: zero broadcasts, zero pins, one shuffle. Global
+  *    calls (no `parts`) are rejected: an unpartitioned window over the
+  *    histogram is the single-reducer class the census exists to catch.
+  *  - '''[[dist]] (sparse straddle, the default)''' — NEAR-DISTINCT
+  *    fact domains (raw doubles, prices in cents at corpus scale):
+  *    nothing fact-sized is shuffled, pinned or sorted; three
+  *    column-pruned input scans (the INPUT CONTRACT below, enforced at
+  *    build time).
   *  - '''[[distHist]]''' — per-value counts ALREADY EXIST as grid
   *    algebra (psi_drift's rest = pooled − own) or the weighting is
   *    semantic ("value occurs w times"): weighted percentiles without
-  *    materializing the expansion. Same bounded/sparse split as above
-  *    via the `bounded` flag.
+  *    materializing the expansion. Same bounded/sparse choice as
+  *    [[dist]], through the same `bounded` flag.
+  *
+  * ==The histogram regimes==
+  *
+  * [[dist]] and [[distHist]] compute the SAME answer as [[p]] —
+  * bit-equal, so every DuckDB oracle is unchanged — from a value
+  * histogram, without the buffer-everything `Percentile` aggregate:
+  *
+  *   (parts × value) histogram with cnt_lt (rows strictly below) and
+  *   eq (rows at the value)  →  keep the ≤ 2·|qs| tie blocks per group
+  *   whose 0-based index span [cnt_lt, cnt_lt + eq) covers ⌊q·(n−1)⌋
+  *   or ⌈q·(n−1)⌉  →  interpolate with Spark's own
+  *   `PercentileBase.getPercentile` expression
+  *   `(⌈pos⌉ − pos)·lo + (pos − ⌊pos⌋)·hi` (integral pos → lo) in the
+  *   same IEEE double order.
+  *
+  * Bit-equality argument: `percentile` computes pos = (n−1)·q in
+  * double, takes the order statistics at ⌊pos⌋/⌈pos⌉ of the sorted
+  * multiset (exactly the histogram rows with cnt_lt ≤ idx <
+  * cnt_lt + eq), casts them to double and interpolates — every
+  * arithmetic step here is the same op on the same values
+  * (PctlDistSpec proves equality on randomized data, ties included).
+  *
+  * The sparse path never builds the full histogram. It runs on
+  * [[DistRank.bucketed]] (per-group [min, max, n] → per-bucket counts
+  * → exclusive bucket carry), keeps only the CANDIDATE buckets whose
+  * [carry, carry + total) index interval contains a wanted order
+  * statistic (≤ 2·|qs|·|groups| of them), and builds the tie histogram
+  * and in-bucket prefix on just those buckets' rows. A tie block lives
+  * in one bucket (the bucket function is monotone), so a candidate
+  * bucket holds the whole straddling block, and carry + in-bucket
+  * prefix is that block's exact cnt_lt. Scale shape: three
+  * column-pruned scans of the input; the largest shuffle is the
+  * bucket-count grid, the largest sort one bucket of one group.
+  *
+  * Output: one row per group — `parts` plus one round-`scale` double
+  * per named fraction. Nulls are skipped and empty groups absent, as
+  * under `percentile` with GROUP BY.
+  *
+  * INPUT CONTRACT (sparse path): the input is scanned THREE times
+  * (bounds, bucket counts, candidate restriction) — free on a
+  * column-pruned table scan; an input that is a join or other derived
+  * relation must go through `graft.plans.Checkpoint.pin(...)` first
+  * (the [[StatTests.brownForsythe]] pattern) so the build runs once,
+  * and [[requireOneScanInput]] rejects it otherwise. The value
+  * expression must also be TOTAL under ANSI (no throwing
+  * subexpression reachable on rows a join condition would exclude):
+  * the device's not-null pre-filter can be merged into an upstream
+  * join residual in any order, so e.g. a division whose divisor a
+  * join condition keeps nonzero must still be branch-guarded (the
+  * [[StatTests]] senSlope shape).
   */
 object Pctl {
   /** Spark side: round-`scale` exact percentile of `e` (a column name
@@ -59,102 +110,26 @@ object Pctl {
   def sql(e: String, q: Double, scale: Int = 6): String =
     s"round(quantile_cont($e, $q), $scale)"
 
-  /** Multi-quantile variant of [[p]]: one sort serves every fraction,
-    * each element rounded at the same scale.
+  /** DuckDB multi-quantile oracle fragment: every fraction interpolated
+    * and rounded at the same scale, as [[sql]] does for one.
     */
-  def pArray(e: String, qs: Seq[Double], scale: Int = 6): Column = {
-    import org.apache.spark.sql.functions.transform
-    transform(expr(s"percentile($e, array(${qs.mkString(",")}))"),
-      f => round(f, scale))
-  }
-
-  /** DuckDB oracle fragment mirroring [[pArray]]. */
   def sqlArray(e: String, qs: Seq[Double], scale: Int = 6): String =
     s"list_transform(quantile_cont($e, [${qs.mkString(",")}]), " +
       s"f -> round(f, $scale))"
 
-  /** Exact interpolated percentiles WITHOUT the buffer-everything
-    * `Percentile` TypedImperativeAggregate (VERDICT r15 #2): Spark's
-    * exact `percentile` materializes EVERY value of a group in its
-    * aggregation buffer, which is fine on bounded grids but a
-    * scale-killer on fact-sized groups. This device computes the SAME
-    * answer — bit-equal to [[p]], so every DuckDB oracle is
-    * unchanged — from a distinct-value histogram:
+  /** Exact percentiles of `v` per `parts` group at the named fractions
+    * `qs`; `bounded` picks the regime (see the decision table).
     *
-    *   (parts × value) histogram  →  bucket-level totals + exclusive
-    *   carry ([[DistRank.bucketOf]]'s monotone decomposition)  →
-    *   restrict the histogram to the ≤ 2·|qs|·|groups| buckets whose
-    *   index interval contains a wanted order statistic
-    *   ⌊q·(n−1)⌋ / ⌈q·(n−1)⌉  →  per-bucket prefix + carry on just
-    *   those rows  →  interpolate with
-    *   Spark's own `PercentileBase.getPercentile` expression
-    *   `(⌈pos⌉ − pos)·lo + (pos − ⌊pos⌋)·hi` (integral pos → lo) in
-    *   the same IEEE double order.
-    *
-    * Bit-equality argument: `percentile` computes pos = (n−1)·q in
-    * double, takes the order statistics at ⌊pos⌋/⌈pos⌉ of the sorted
-    * multiset (exactly the histogram rows with cnt_lt ≤ idx <
-    * cnt_lt + eq), casts them to double and interpolates — every
-    * arithmetic step here is the same op on the same values
-    * (PctlDistSpec proves equality on randomized data, ties included).
-    *
-    * Scale shape: one map-combined hash aggregate over the fact
-    * relation; everything after is distinct-value-sized or smaller.
-    * Bucket totals map-combine to ≤ |groups|·1024 rows; the only
-    * ordered windows are the tiny bucket carry and the per-bucket
-    * prefix over CANDIDATE buckets only (≤ |distinct|/1024 rows
-    * each) — the full histogram is never sorted, at any scale. The
-    * candidate restriction is an equi-join on (group, bucket) whose
-    * build side is ≤ 2·|qs|·|groups| rows.
-    *
-    * Output: one row per group — `parts` columns plus one
-    * round-`scale` double column per named fraction. Null values are
-    * skipped like the aggregate does. Rows of an empty group don't
-    * exist (no histogram rows), matching `percentile`'s null-group
-    * absence under GROUP BY.
-    *
-    * INPUT CONTRACT: the sparse path scans `rows` THREE times
-    * (bounds, bucket counts, candidate restriction) — free on a
-    * column-pruned table scan; callers whose input is a join or other
-    * derived relation should `graft.plans.Checkpoint.pin(...)` it first (the
-    * [[StatTests.brownForsythe]] pattern) so the build runs once.
-    * The value expression must also be TOTAL under ANSI (no throwing
-    * subexpression reachable on rows a join condition would exclude):
-    * the device's not-null pre-filter can be merged into an upstream
-    * join residual in any order, so e.g. a division whose divisor a
-    * join condition keeps nonzero must still be branch-guarded (the
-    * [[StatTests]] senSlope ANSI lesson).
-    */
-  /** `bounded = true` variant of [[dist]] for value columns whose
-    * DISTINCT-VALUE DOMAIN is provably corpus-size-independent (2-dp
-    * cent buckets, 1..50 quantities, document-length counts): the
-    * cumulative counts come from ONE partitioned window over the
-    * per-group histogram instead of the two-level bucket device —
-    * zero extra broadcasts, zero persists, one shuffle. A per-group
-    * histogram sort is safe exactly when the domain is bounded (a
-    * 40k-row sort per group at ANY corpus size); for fact-correlated
-    * domains use the default device. Grouped callers only: a global
-    * bounded window would be the unpartitioned-window class the
-    * census exists to catch.
-    */
-  def distBounded(rows: DataFrame, parts: Seq[String], v: String,
-                  qs: Seq[(String, Double)], scale: Int = 6,
-                  countAs: Option[String] = None): DataFrame = {
-    require(parts.nonEmpty, "distBounded is for grouped calls; " +
-      "use dist for global quantiles")
-    dist(rows, parts, v, qs, scale, bounded = true, countAs = countAs)
-  }
-
-  /** Optional extra output: `countAs = Some(name)` appends the group
-    * size as a BIGINT column — the device already carries it as the
-    * rank-position denominator, so callers that would otherwise run a
-    * SEPARATE count aggregate over the fact (one more full scan) get
-    * it for free. SEMANTICS (ADVICE r16): this is the count of
-    * NON-NULL `v` rows — the device filters nulls before building the
-    * histogram, exactly the population the percentiles are computed
-    * over — i.e. SQL `COUNT(v)`, not `COUNT(*)`. Oracles of countAs
-    * consumers must write `COUNT(<v>)`. Under [[distHist]] it is the
-    * TOTAL WEIGHT of the group (the expanded multiset's row count).
+    * `countAs = Some(name)` appends the group size as a BIGINT column —
+    * the device already carries it as the rank-position denominator,
+    * so callers that would otherwise run a SEPARATE count aggregate
+    * over the fact (one more full scan) get it for free. It is the
+    * count of NON-NULL `v` rows — the device filters nulls before
+    * building the histogram, exactly the population the percentiles
+    * are computed over — i.e. SQL `COUNT(v)`, not `COUNT(*)`. Oracles
+    * of countAs consumers must write `COUNT(<v>)`. Under [[distHist]]
+    * it is the TOTAL WEIGHT of the group (the expanded multiset's row
+    * count).
     */
   def dist(rows: DataFrame, parts: Seq[String], v: String,
            qs: Seq[(String, Double)], scale: Int = 6,
@@ -177,22 +152,17 @@ object Pctl {
                qs: Seq[(String, Double)], scale: Int = 6,
                bounded: Boolean = false,
                countAs: Option[String] = None): DataFrame = {
-    // ADVICE r17: a fractional weight in (0,1) passes the w > 0 filter
-    // and silently truncates to 0 under cast(Long) (1.9 → 1), quietly
-    // diverging from the "value v occurs w times" multiset contract.
-    // Integral weight TYPES are trusted; anything else must carry
-    // integral VALUES, enforced loudly per row (the psmAtt
-    // enforce-the-envelope pattern) on the already-required filter
-    // pass — zero extra scans.
+    // a fractional weight would silently truncate under cast(Long)
+    // (1.9 → 1), diverging from the multiset contract. Integral weight
+    // TYPES are trusted; anything else must carry integral VALUES,
+    // asserted per row on the already-required filter pass.
     val integralType = hist.schema(w).dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case d: DecimalType if d.scale == 0                => true
       case _                                             => false
     }
-    // rows the device documents as IGNORED (null v/w, w <= 0) stay
-    // ignored — the assert polices only rows that would contribute,
-    // so e.g. a sentinel -0.5 weight is dropped like any w <= 0, not
-    // escalated into a job failure the contract never promised
+    // only rows that would contribute are policed: ignored rows (null
+    // v/w, w <= 0, e.g. a -0.5 sentinel) stay ignored, never a failure
     val guarded =
       if (integralType) hist
       else hist.filter(coalesce(assert_true(
@@ -207,20 +177,12 @@ object Pctl {
       parts, qs, scale, bounded, countAs)
   }
 
-  /** Build-time enforcement of the sparse path's 3-scan INPUT CONTRACT:
-    * the sparse device scans its input three times
-    * (bounds, bucket counts, candidate restriction) — free on a
-    * column-pruned scan or a pinned relation, silently 3×
-    * on an expensive subplan nobody pinned. The input's OPTIMIZED plan
-    * (cache substitution applied, so a [[graft.plans.Checkpoint.pin]] input
-    * bottoms out at an InMemoryRelation leaf) must contain no join,
-    * aggregate, window, generator, sort or shuffle node; violations
-    * fail at gate-construction time with the fix named, like the
-    * PlanAuditSpec censuses fail at test time. PctlDistSpec pins both
-    * directions (a raw join input throws; the same input pinned
-    * passes).
+  /** The sparse path's INPUT CONTRACT at build time: the OPTIMIZED
+    * plan (where a pinned input is an InMemoryRelation leaf) holds no
+    * join, aggregate, window, generator, sort or shuffle node.
     */
   private def requireOneScanInput(in: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical
     import org.apache.spark.sql.catalyst.plans.logical._
     // collectWithSubqueries: a scalar/EXISTS subquery inside a filter
     // is exactly as expensive to re-run three times as a top-level
@@ -229,7 +191,7 @@ object Pctl {
     val offenders = in.queryExecution.optimizedPlan.collectWithSubqueries {
       case p: Join => p.nodeName
       case p: Aggregate => p.nodeName
-      case p: Window => p.nodeName
+      case p: logical.Window => p.nodeName
       case p: Generate => p.nodeName
       case p: Sort => p.nodeName
       case p: Expand => p.nodeName
@@ -240,10 +202,15 @@ object Pctl {
         s"THREE times, but this input's plan contains ${offenders.distinct.mkString(", ")} — " +
         "wrap the input in graft.plans.Checkpoint.pin(...) (the brownForsythe " +
         "pattern) so the subplan materializes once, or use " +
-        "distBounded if the value domain is corpus-size-independent")
+        "dist(..., bounded = true) if the value domain is corpus-size-independent")
   }
 
-  private def distW(in0: DataFrame, parts: Seq[String],
+  /** The shared core of [[dist]] and [[distHist]] over `(parts, __v,
+    * __w)` rows: each regime yields the tie-block histogram rows
+    * `(parts, __v, __eq, __eq_lt, __eq_tot)` that can straddle a wanted
+    * order statistic; the straddle filter and interpolation are common.
+    */
+  private def distW(in: DataFrame, parts: Seq[String],
                     qs: Seq[(String, Double)], scale: Int,
                     bounded: Boolean,
                     countAs: Option[String]): DataFrame = {
@@ -252,98 +219,51 @@ object Pctl {
     val qlits = array(qs.map { case (nm, q) =>
       struct(lit(nm).as("__qn"), lit(q).as("__q"))
     }: _*)
-    // SPARSE STRADDLE (r17, VERDICT r16 #2): the device only ever
-    // reads the ≤ 2·|qs| tie blocks per group that straddle
-    // ⌊q·(n−1)⌋/⌈q·(n−1)⌉ — so it needs neither the full
-    // distinct-value histogram the r16 device hash-aggregated,
-    // persisted and window-sorted (fact-sized on near-distinct
-    // domains like sk_quantile_reservoir's extendedprice — the
-    // VERDICT r16 stress case), nor any fact-sized shuffle at all:
-    //   pass 1: per-group [min, max, n] (map-combined, no shuffle of
-    //     data) → broadcast;
-    //   pass 2: per-(group, bucket) counts under
-    //     [[DistRank.bucketOf]]'s monotone bucketing (map-combined to
-    //     ≤ |groups|·1024 rows) → exclusive bucket carry (tiny
-    //     window) → CANDIDATE buckets = those whose [carry,
-    //     carry+total) index interval contains a wanted order
-    //     statistic (inline literal explode, no join);
-    //   pass 3: equi-join the input down to candidate buckets
-    //     (≤ 2·|qs|·|groups| buckets, ~n/1024 rows each), build the
-    //     tie histogram and per-bucket exclusive prefix on just those
-    //     rows — carry + local prefix = the global cumulative on
-    //     exactly the tie blocks that matter.
-    // A tie block lives in one bucket (bucketOf is monotone), so the
-    // bucket holding index k holds the whole straddling block;
-    // bit-equality vs `percentile` is untouched (PctlDistSpec).
-    // At 100 TB: three column-pruned scans of the input, nothing
-    // fact-sized is ever shuffled, persisted or sorted — the largest
-    // shuffle is the bucket-count grid, the largest sort one bucket
-    // of one group.
     val pre =
       if (bounded) {
-        val hist0 = in0
+        require(parts.nonEmpty, "the bounded regime is for grouped calls " +
+          "(an unpartitioned window would sort the whole histogram on one " +
+          "reducer); use the sparse default for global quantiles")
+        val hist0 = in
           .groupBy((pc :+ col("__v")): _*)
           .agg(sum(col("__w")).as("__eq"))
-        val wCum = org.apache.spark.sql.expressions.Window
-          .partitionBy(pc: _*).orderBy(col("__v"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val wTot = org.apache.spark.sql.expressions.Window.partitionBy(pc: _*)
+        val wCum = Window.partitionBy(pc: _*).orderBy(col("__v"))
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val wTot = Window.partitionBy(pc: _*)
         hist0
           .withColumn("__eq_lt",
             coalesce(sum(col("__eq")).over(wCum), lit(0L)))
           .withColumn("__eq_tot", sum(col("__eq")).over(wTot))
       } else {
-        requireOneScanInput(in0)
-        val in = in0
-        val vType = in.schema("__v").dataType
-        val bounds =
-          (if (parts.isEmpty) in.groupBy() else in.groupBy(pc: _*))
-            .agg(min(col("__v")).as("__blo"), max(col("__v")).as("__bhi"),
-              sum(col("__w")).as("__n"))
-        val withB =
-          (if (parts.isEmpty) in.crossJoin(broadcast(bounds))
-           else in.join(broadcast(bounds), parts))
-            .withColumn("__b",
-              DistRank.bucketOf(col("__v"), col("__blo"), col("__bhi"), vType))
-            .drop("__blo", "__bhi")
-        val bcnt = withB.groupBy((pc :+ col("__b")): _*)
-          .agg(sum(col("__w")).as("__bt"), min(col("__n")).as("__n"))
-        val carryParts = if (parts.isEmpty) Seq(lit(0)) else pc
-        val wCarry = org.apache.spark.sql.expressions.Window
-          .partitionBy(carryParts: _*).orderBy(col("__b"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val candB = bcnt
-          .withColumn("__blt", coalesce(sum(col("__bt")).over(wCarry), lit(0L)))
-          .select((pc :+ col("__b") :+ col("__blt") :+ col("__bt") :+
-            col("__n") :+ explode(qlits).as("__f")): _*)
+        requireOneScanInput(in)
+        val (rows, carry) = DistRank.bucketed(in, parts, "__v", Seq("w" -> col("__w")))
+        // candidate buckets: those whose [carry, carry + total) index
+        // interval holds a wanted order statistic (inline literal
+        // explode, no join)
+        val candB = carry
+          .select((pc :+ col("__b") :+ col("__carry_w").as("__blt") :+
+            col("__tot_w").as("__bt") :+ col("__gtot_w").as("__n") :+
+            explode(qlits).as("__f")): _*)
           .withColumn("__kpos",
             (col("__n") - 1L).cast(DoubleType) * col("__f.__q"))
           .filter(
-            (floor(col("__kpos")).cast(LongType) >= col("__blt") &&
-              floor(col("__kpos")).cast(LongType) < col("__blt") + col("__bt")) ||
-              (ceil(col("__kpos")).cast(LongType) >= col("__blt") &&
-                ceil(col("__kpos")).cast(LongType) < col("__blt") + col("__bt")))
+            inSpan(floor(col("__kpos")).cast(LongType), col("__blt"), col("__bt")) ||
+              inSpan(ceil(col("__kpos")).cast(LongType), col("__blt"), col("__bt")))
           .groupBy((pc :+ col("__b")): _*)
           .agg(min(col("__blt")).as("__blt"), min(col("__n")).as("__n"))
-        val wLoc = org.apache.spark.sql.expressions.Window
-          .partitionBy((pc :+ col("__b")): _*).orderBy(col("__v"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        // ADVICE r17: candB is ≤ 2·|qs|·|groups| rows by construction,
-        // but its plan (windows/explode/aggregates) carries no
-        // row-count stats Spark trusts at planning time (the r16
-        // psi_drift precedent) — without the hint this join can plan
-        // sort-merge and shuffle+sort the fact-sized probe side,
-        // breaking the "nothing fact-sized is ever shuffled or
-        // sorted" contract. AQE's conversion would come only AFTER
-        // the probe-side shuffle write; the hint keeps it broadcast
-        // from the first plan.
-        withB.select((pc :+ col("__v") :+ col("__w") :+ col("__b")): _*)
+        // candB is ≤ 2·|qs|·|groups| rows by construction, but its plan
+        // (windows/explode/aggregates) carries no row-count stats Spark
+        // trusts at planning time — without the hint this join can plan
+        // sort-merge and shuffle+sort the fact-sized probe side. AQE's
+        // conversion would come only AFTER the probe-side shuffle
+        // write; the hint keeps it broadcast from the first plan.
+        rows.select((pc :+ col("__v") :+ col("__w") :+ col("__b")): _*)
           .join(broadcast(candB), parts :+ "__b")
           .groupBy((pc :+ col("__b") :+ col("__blt") :+ col("__n") :+
             col("__v")): _*)
           .agg(sum(col("__w")).as("__eq"))
           .withColumn("__eq_lt",
-            col("__blt") + coalesce(sum(col("__eq")).over(wLoc), lit(0L)))
+            col("__blt") + DistRank.inBucketLt(parts, "__v", "__eq"))
           .withColumn("__eq_tot", col("__n"))
       }
     // inline straddle: explode the fraction literals onto the
@@ -356,12 +276,8 @@ object Pctl {
         (col("__eq_tot") - 1L).cast(DoubleType) * col("__f.__q"))
       .withColumn("__lo", floor(col("__pos")).cast(LongType))
       .withColumn("__hi", ceil(col("__pos")).cast(LongType))
-      .withColumn("__isLo",
-        col("__lo") >= col("__eq_lt") &&
-          col("__lo") < col("__eq_lt") + col("__eq"))
-      .withColumn("__isHi",
-        col("__hi") >= col("__eq_lt") &&
-          col("__hi") < col("__eq_lt") + col("__eq"))
+      .withColumn("__isLo", inSpan(col("__lo"), col("__eq_lt"), col("__eq")))
+      .withColumn("__isHi", inSpan(col("__hi"), col("__eq_lt"), col("__eq")))
       .filter(col("__isLo") || col("__isHi"))
     val interpolated = cand
       .groupBy((pc :+ col("__f.__qn").as("__qn") :+ col("__pos")): _*)
@@ -372,7 +288,7 @@ object Pctl {
       // (Spark 4.1.2): integral position returns the lower key
       // directly; otherwise
       //   (higher − position)·lower + (position − lower)·higher
-      // with lower = ⌊pos⌋, higher = ⌈pos⌉. ADVICE r16: the lerp form
+      // with lower = ⌊pos⌋, higher = ⌈pos⌉. The lerp form
       // lo + (hi−lo)·frac can differ from this by an ulp before the
       // round, so the device mirrors Spark's order exactly — the
       // PctlDistSpec bit-equality claim holds by construction, not by
@@ -390,7 +306,10 @@ object Pctl {
     val aggCols = qs.map { case (nm, _) =>
       min(when(col("__qn") === nm, col("__val"))).as(nm) } ++
       countAs.map(nm => min(col("__n")).as(nm))
-    (if (parts.isEmpty) interpolated.groupBy() else interpolated.groupBy(pc: _*))
-      .agg(aggCols.head, aggCols.tail: _*)
+    interpolated.groupBy(pc: _*).agg(aggCols.head, aggCols.tail: _*)
   }
+
+  /** 0-based index `k` falls in the span [lo, lo + n). */
+  private def inSpan(k: Column, lo: Column, n: Column): Column =
+    k >= lo && k < lo + n
 }

@@ -47,8 +47,8 @@ object QuantileOps {
   def tukeyFences(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.t(s, dir, "events")
       .select(col("event_type"), col("value").as("v"))
-    val q = Pctl.distBounded(ev, Seq("event_type"), "v",
-        Seq("q1" -> 0.25, "q3" -> 0.75))
+    val q = Pctl.dist(ev, Seq("event_type"), "v",
+        Seq("q1" -> 0.25, "q3" -> 0.75), bounded = true)
       .withColumn("iqr", round(col("q3") - col("q1"), 6))
       // fences can cross zero → two-sided −0.0 normalization
       .withColumn("lo_inner", round(col("q1") - col("iqr") * 1.5, 6) + lit(0.0))
@@ -165,10 +165,10 @@ object QuantileOps {
     val types = e.select(col("event_type").as("t")).distinct()
     val rest = broadcast(types).join(e, col("event_type") =!= col("t"))
       .select(col("t"), col("v"))
-    val own = Pctl.distBounded(e.select(col("event_type").as("t"), col("v")),
-      Seq("t"), "v", deciles.map { case (n, q) => s"o_$n" -> q })
-    val oth = Pctl.distBounded(rest, Seq("t"), "v",
-      deciles.map { case (n, q) => s"r_$n" -> q })
+    val own = Pctl.dist(e.select(col("event_type").as("t"), col("v")),
+      Seq("t"), "v", deciles.map { case (n, q) => s"o_$n" -> q }, bounded = true)
+    val oth = Pctl.dist(rest, Seq("t"), "v",
+      deciles.map { case (n, q) => s"r_$n" -> q }, bounded = true)
     val stacked = (1 to 9).map(i =>
       s"$i, o_d$i, r_d$i").mkString(", ")
     own.join(oth, "t")
@@ -213,8 +213,8 @@ object QuantileOps {
       .select(col("source"), col("n_chars"))
     val qs = Seq("p10" -> 0.1, "p25" -> 0.25, "p50" -> 0.5,
       "p75" -> 0.75, "p90" -> 0.9, "p99" -> 0.99)
-    Pctl.distBounded(docs, Seq("source"), "n_chars", qs,
-        countAs = Some("n_docs"))
+    Pctl.dist(docs, Seq("source"), "n_chars", qs,
+        bounded = true, countAs = Some("n_docs"))
       .select(col("source"), col("n_docs"), col("p10"), col("p25"),
         col("p50"), col("p75"), col("p90"), col("p99"),
         round(col("p75") - col("p25"), 6).as("iqr"))
@@ -351,8 +351,8 @@ object QuantileOps {
   def lengthFilter(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.t(s, dir, "documents")
       .select(col("source"), col("n_chars"))
-    val bands = Pctl.distBounded(docs, Seq("source"), "n_chars",
-      Seq("lo" -> 0.05, "hi" -> 0.95), countAs = Some("n_docs"))
+    val bands = Pctl.dist(docs, Seq("source"), "n_chars",
+      Seq("lo" -> 0.05, "hi" -> 0.95), bounded = true, countAs = Some("n_docs"))
     docs.join(broadcast(bands), "source")
       .groupBy(col("source"), col("n_docs"), col("lo"), col("hi"))
       .agg(sum(when(col("n_chars") >= col("lo") &&

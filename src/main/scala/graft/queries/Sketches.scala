@@ -58,6 +58,48 @@ object Sketches {
   // diverges from the sketch it reads (ADVICE r6)
   private val KmvK = graft.functions.KmvSketch.K
 
+  /** The KMV sketch STATE: ≤k rows per group, whatever the corpus size
+    * — exposed so ScaleBench can pin its cardinality constant at 10×.
+    */
+  private[graft] def kmvState(s: SparkSession, dir: String): DataFrame =
+    kmvStateWith(s, dir, keyH60)
+
+  private def keyH60(key: Column): Column = h60(key.cast("string"))
+
+  // one hash → distinct → top-k body for both hash twins
+  private def kmvStateWith(s: SparkSession, dir: String,
+                           hash: Column => Column): DataFrame = {
+    val hashes = Tables.t(s, dir, "lineitem")
+      .select(col("l_returnflag").as("grp"), hash(col("l_orderkey")).as("h"))
+      .distinct()
+    val w = Window.partitionBy(col("grp")).orderBy(col("h"))
+    hashes.withColumn("rn", row_number().over(w)).filter(col("rn") <= KmvK)
+  }
+
+  /** The KMV readout shared by every twin: `kmv` is (grp, k_seen, kth);
+    * groups smaller than k report the exact count they saw, saturated
+    * groups `saturated(kth)`, next to the exact distinct count.
+    */
+  private def kmvReadout(s: SparkSession, dir: String, kmv: DataFrame,
+                         saturated: Column => Column): DataFrame = {
+    val exact = Tables.t(s, dir, "lineitem").groupBy(col("l_returnflag").as("grp"))
+      .agg(countDistinct(col("l_orderkey")).as("n_exact"))
+    kmv.join(exact, "grp")
+      .select(col("grp"), col("n_exact"),
+        round(
+          when(col("k_seen") < KmvK, col("k_seen").cast("double"))
+            .otherwise(saturated(col("kth").cast("double"))),
+          6).as("n_est"))
+      .orderBy(col("grp"))
+  }
+
+  private def kmvDistinctWith(s: SparkSession, dir: String, hash: Column => Column,
+                              saturated: Column => Column): DataFrame =
+    kmvReadout(s, dir,
+      kmvStateWith(s, dir, hash).groupBy(col("grp"))
+        .agg(count(lit(1)).as("k_seen"), max(col("h")).as("kth")),
+      saturated)
+
   /** K-minimum-values distinct-count sketch (Bar-Yossef et al. 2002),
     * per l_returnflag group: keep the k smallest distinct hash values;
     * if the kth smallest normalized hash is R, the group holds ≈ k/R
@@ -71,33 +113,12 @@ object Sketches {
     * Groups smaller than k short-circuit to the exact count (the
     * sketch saw every value).
     */
-  /** The KMV sketch STATE: ≤k rows per group, whatever the corpus size
-    * — exposed so ScaleBench can pin its cardinality constant at 10×.
-    */
-  private[graft] def kmvState(s: SparkSession, dir: String): DataFrame = {
-    val hashes = Tables.t(s, dir, "lineitem")
-      .select(col("l_returnflag").as("grp"),
-        h60(col("l_orderkey").cast("string")).as("h"))
-      .distinct()
-    val w = Window.partitionBy(col("grp")).orderBy(col("h"))
-    hashes.withColumn("rn", row_number().over(w)).filter(col("rn") <= KmvK)
-  }
+  def kmvDistinct(s: SparkSession, dir: String): DataFrame =
+    kmvDistinctWith(s, dir, keyH60, kmvEst60)
 
-  def kmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.t(s, dir, "lineitem")
-    val kmv = kmvState(s, dir)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("k_seen"), max(col("h")).as("kth"))
-    val exact = li.groupBy(col("l_returnflag").as("grp"))
-      .agg(countDistinct(col("l_orderkey")).as("n_exact"))
-    kmv.join(exact, "grp")
-      .select(col("grp"), col("n_exact"),
-        round(
-          when(col("k_seen") < KmvK, col("k_seen").cast("double"))
-            .otherwise(lit((KmvK - 1).toDouble * math.pow(2, 60)) / col("kth").cast("double")),
-          6).as("n_est"))
-      .orderBy(col("grp"))
-  }
+  // (k−1)·2^60 / kth: the md5 twin's kth hash is uniform on [0, 2^60)
+  private def kmvEst60(kth: Column): Column =
+    lit((KmvK - 1).toDouble * math.pow(2, 60)) / kth
 
   /** The same KMV estimate computed by the typed one-pass
     * [[graft.functions.KmvSketch]] Aggregator (map-side partial merge:
@@ -106,24 +127,14 @@ object Sketches {
     * [[kmvDistinct]]: two independent implementations, one truth.
     */
   def kmvAgg(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.t(s, dir, "lineitem")
     val sketch = udaf(graft.functions.KmvSketch)
-    val kmv = li
-      .select(col("l_returnflag").as("grp"),
-        h60(col("l_orderkey").cast("string")).as("h"))
+    val kmv = Tables.t(s, dir, "lineitem")
+      .select(col("l_returnflag").as("grp"), keyH60(col("l_orderkey")).as("h"))
       .groupBy(col("grp"))
       .agg(sketch(col("h")).as("mins"))
       .select(col("grp"), size(col("mins")).cast("long").as("k_seen"),
         element_at(col("mins"), -1).as("kth"))
-    val exact = li.groupBy(col("l_returnflag").as("grp"))
-      .agg(countDistinct(col("l_orderkey")).as("n_exact"))
-    kmv.join(exact, "grp")
-      .select(col("grp"), col("n_exact"),
-        round(
-          when(col("k_seen") < KmvK, col("k_seen").cast("double"))
-            .otherwise(lit((KmvK - 1).toDouble * math.pow(2, 60)) / col("kth").cast("double")),
-          6).as("n_est"))
-      .orderBy(col("grp"))
+    kmvReadout(s, dir, kmv, kmvEst60)
   }
 
   private val kmvOracle: String =
@@ -154,6 +165,29 @@ object Sketches {
   private val CmWidth = 32
   private val CmTopK = 20
 
+  /** The count-min sketch STATE: ≤ d×w rows regardless of corpus —
+    * exposed for the ScaleBench cardinality pin.
+    */
+  private[graft] def countMinState(s: SparkSession, dir: String): DataFrame =
+    cmState(cmKeyed(cmTf(s, dir), h60))
+
+  private def cmTf(s: SparkSession, dir: String): DataFrame =
+    Tables.t(s, dir, "documents")
+      .select(explode(split(col("text"), " ")).as("token"))
+      .filter(length(col("token")) > 0)
+      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+
+  // the d salted rows of each term: `hash` over the salted term, pmod'd
+  // into the bucket range (pmod, not %, so a signed hash stays in range)
+  private def cmKeyed(tf: DataFrame, hash: Column => Column): DataFrame =
+    tf.select(col("token"), col("cnt"),
+        explode(array((0 until CmDepth).map(lit(_)): _*)).as("r"))
+      .withColumn("bucket",
+        pmod(hash(concat_ws(":", col("r"), col("token"))), lit(CmWidth.toLong)))
+
+  private def cmState(keyed: DataFrame): DataFrame =
+    keyed.groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("bcnt"))
+
   /** Count-min sketch (Cormode & Muthukrishnan 2005) heavy-hitter
     * estimates: d=4 salted hash rows × w=32 buckets over the
     * documents token stream; a term's estimate is the MIN of its d
@@ -166,29 +200,15 @@ object Sketches {
     * terms only — at corpus scale the token stream is huge, the
     * vocabulary is not.
     */
-  /** The count-min sketch STATE: ≤ d×w rows regardless of corpus —
-    * exposed for the ScaleBench cardinality pin.
-    */
-  private[graft] def countMinState(s: SparkSession, dir: String): DataFrame =
-    cmKeyed(s, dir).groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("bcnt"))
+  def countMinTopk(s: SparkSession, dir: String): DataFrame =
+    countMinTopkWith(s, dir, h60)
 
-  private def cmTf(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-
-  private def cmKeyed(s: SparkSession, dir: String): DataFrame =
-    cmTf(s, dir)
-      .select(col("token"), col("cnt"),
-        explode(array((0 until CmDepth).map(lit(_)): _*)).as("r"))
-      .withColumn("bucket",
-        pmod(h60(concat_ws(":", col("r"), col("token"))), lit(CmWidth.toLong)))
-
-  def countMinTopk(s: SparkSession, dir: String): DataFrame = {
+  // one sketch → top-k → estimate body for both hash twins
+  private def countMinTopkWith(s: SparkSession, dir: String,
+                               hash: Column => Column): DataFrame = {
     val tf = cmTf(s, dir)
-    val keyed = cmKeyed(s, dir)
-    val cms = countMinState(s, dir)
+    val keyed = cmKeyed(tf, hash)
+    val cms = cmState(keyed)
     val top = tf.orderBy(col("cnt").desc, col("token")).limit(CmTopK)
     top
       .join(keyed.select(col("token"), col("r"), col("bucket")), "token")
@@ -316,54 +336,17 @@ object Sketches {
     * rounding on the shift is harmless — it perturbs an estimator that
     * already carries 1/sqrt(k) relative error.
     */
-  def kmvDistinctXx(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.t(s, dir, "lineitem")
-    val hashes = li
-      .select(col("l_returnflag").as("grp"), hxx(col("l_orderkey")).as("h"))
-      .distinct()
-    val w = Window.partitionBy(col("grp")).orderBy(col("h"))
-    val kmv = hashes
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= KmvK)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("k_seen"), max(col("h")).as("kth"))
-    val exact = li.groupBy(col("l_returnflag").as("grp"))
-      .agg(countDistinct(col("l_orderkey")).as("n_exact"))
-    kmv.join(exact, "grp")
-      .select(col("grp"), col("n_exact"),
-        round(
-          when(col("k_seen") < KmvK, col("k_seen").cast("double"))
-            .otherwise(lit((KmvK - 1).toDouble) /
-              ((col("kth").cast("double") + lit(math.pow(2, 63))) / lit(math.pow(2, 64)))),
-          6).as("n_est"))
-      .orderBy(col("grp"))
-  }
+  def kmvDistinctXx(s: SparkSession, dir: String): DataFrame =
+    kmvDistinctWith(s, dir, hxx,
+      kth => lit((KmvK - 1).toDouble) /
+        ((kth + lit(math.pow(2, 63))) / lit(math.pow(2, 64))))
 
   /** [[countMinTopk]] with the production hash: the d salted rows come
     * from xxhash64 over the salted term, pmod'd into the bucket range
     * (pmod, not %, because xxhash64 is signed).
     */
-  def countMinTopkXx(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.t(s, dir, "documents")
-    val tf = docs
-      .select(explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val keyed = tf
-      .select(col("token"), col("cnt"),
-        explode(array((0 until CmDepth).map(lit(_)): _*)).as("r"))
-      .withColumn("bucket",
-        pmod(xxhash64(concat_ws(":", col("r"), col("token"))), lit(CmWidth.toLong)))
-    val cms = keyed.groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("bcnt"))
-    val top = tf.orderBy(col("cnt").desc, col("token")).limit(CmTopK)
-    top
-      .join(keyed.select(col("token"), col("r"), col("bucket")), "token")
-      .join(cms, Seq("r", "bucket"))
-      .groupBy(col("token"), col("cnt"))
-      .agg(min(col("bcnt")).as("est_cnt"))
-      .select(col("token"), col("cnt").as("exact_cnt"), col("est_cnt"))
-      .orderBy(col("exact_cnt").desc, col("token"))
-  }
+  def countMinTopkXx(s: SparkSession, dir: String): DataFrame =
+    countMinTopkWith(s, dir, c => xxhash64(c))
 
   /** [[bloomSemijoin]] through Spark's NATIVE BloomFilter sketch (the
     * machinery behind runtime row-level filtering): the member side
@@ -433,7 +416,7 @@ object Sketches {
   }
 
   def quantileReservoir(s: SparkSession, dir: String): DataFrame = {
-    // exact leg on the histogram device (VERDICT r15 #2); the row
+    // exact leg on the sparse histogram regime; the row
     // count rides the device's own group total — no second count scan
     val li = Tables.t(s, dir, "lineitem")
       .select(col("l_returnflag").as("grp"), col("l_extendedprice").as("v"))
@@ -824,26 +807,22 @@ object Sketches {
     QueryDef("sk_quantile_reservoir", quantileReservoir, Some(quantileReservoirOracle)),
   )
 
-  /** The production-hash twins are not DuckDB-reproducible (xxhash64 /
-    * native BloomFilter), so they carry no oracle; the driver contract
-    * has no rows-only mode, which made them red `err: no_oracle` gates
-    * in round 7. They live here instead: SketchesSpec pins their
-    * properties, and Bench/ScaleBench time them next to the md5 twins.
-    */
   /** [[quantileReservoir]]'s estimator with the production hash: the
-    * reservoir rank is codegen'd xxhash64 instead of per-row md5 (the
-    * md5 is the oracle-reproducibility device). The estimator only
-    * needs a uniform ORDER, so the unsigned-order mapping of [[hxx]]
-    * serves as the rank directly. The twin times ONLY the
-    * hash-dependent sampling path (VERDICT r16 #2): the exact
-    * histogram-device leg never touches the hash, is already timed
-    * inside the gate, and re-running it here doubled the pair's bench
-    * cost for zero extra evidence — SketchesSpec pins the estimate
-    * against the exact interquartile band instead.
+    * estimator only needs a uniform ORDER, so the unsigned-order
+    * mapping of [[hxx]] serves as the reservoir rank directly. The twin
+    * times ONLY the hash-dependent sampling path: the exact leg never
+    * touches the hash and is already timed inside the gate;
+    * SketchesSpec pins the estimate against the exact interquartile
+    * band instead.
     */
   def quantileReservoirXx(s: SparkSession, dir: String): DataFrame =
     reservoirEst(s, dir, hxx).orderBy(col("grp"))
 
+  /** The production-hash twins are not DuckDB-reproducible (xxhash64 /
+    * native BloomFilter), so they carry no oracle and stay off the
+    * correctness surface: SketchesSpec pins their properties, and
+    * Bench/ScaleBench time them next to the md5 twins.
+    */
   val benchOnlyDefs: Seq[QueryDef] = Seq(
     QueryDef("sk_kmv_xxhash", kmvDistinctXx, None),
     QueryDef("sk_countmin_xxhash", countMinTopkXx, None),

@@ -119,8 +119,8 @@ object StatOps {
     */
   def trimmedMean(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.t(s, dir, "events")
-    val fences = Pctl.distBounded(ev, Seq("event_type"), "value",
-      Seq("lo" -> 0.1, "hi" -> 0.9))
+    val fences = Pctl.dist(ev, Seq("event_type"), "value",
+      Seq("lo" -> 0.1, "hi" -> 0.9), bounded = true)
     ev.select(col("event_type"), col("value"),
         round(col("value") * 1000000).cast(LongType).as("vm"))
       .join(broadcast(fences), "event_type")
@@ -1720,6 +1720,42 @@ object StatOps {
        |  CAST(CASE WHEN rk <= k_max THEN 1 ELSE 0 END AS INT) AS rejected
        |FROM k ORDER BY rk""".stripMargin
 
+  /** The pooled rank-sum block [[kruskalWallis]] and
+    * [[StatTests.dunnTest]] share: event values (micro-units) ranked on
+    * ONE pooled midrank scale across event types. Returns
+    *  - `g`: per event type `grp`, its row count `n` and `s2` = Σ of its
+    *    rows' doubled midranks 2·rank_min + ties − 1 (DECIMAL(38,0));
+    *  - `ties`: one row, `tie3` = Σ (t³ − t) over the pooled tie blocks.
+    *
+    * Scale shape: one map-combined hash aggregate to the (group, value)
+    * histogram, a second tiny aggregate to the distinct-value grid,
+    * [[DistRank.prefixLt]] for the pooled cumulative counts (bucketed —
+    * no single-task sort), and one equi-join of the two histograms on
+    * the value key. Both histograms are pinned: the (group, value) one
+    * feeds the value grid and the join, and the ranked value grid feeds
+    * two structurally different consumers (the per-group rank-sum join
+    * and the tie aggregate), so the prefix-sum lineage runs once.
+    */
+  private[queries] def pooledRankSums(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val d = DecimalType(38, 0)
+    val ev = Tables.t(s, dir, "events")
+      .select(col("event_type").as("grp"),
+        round(col("value") * 1000000).cast(LongType).as("vm"))
+    val histGV = graft.plans.Checkpoint.pin(ev.groupBy(col("grp"), col("vm"))
+      .agg(count(lit(1)).as("cg")))
+    val histV = graft.plans.Checkpoint.pin(DistRank.prefixLt(
+      histGV.groupBy(col("vm")).agg(sum(col("cg")).as("eq")),
+      Nil, "vm", Seq("eq"))
+      .withColumn("r2", lit(2L) * col("eq_lt") + col("eq") + lit(1L)))
+    val g = histGV.join(histV.select(col("vm"), col("r2")), "vm")
+      .groupBy(col("grp"))
+      .agg(sum(col("cg")).as("n"), sum(col("r2").cast(d) * col("cg")).as("s2"))
+    val ties = histV
+      .agg(coalesce(sum(col("eq").cast(d) * col("eq") * col("eq") - col("eq")),
+        lit(0).cast(d)).as("tie3"))
+    (g, ties)
+  }
+
   /** Kruskal–Wallis H (1952): the k-group rank ANOVA of event value
     * across event types — [[mannWhitney]]'s k-sample generalization,
     * with the tie correction C = 1 − Σ(t³−t)/(N³−N). Midranks stay
@@ -1728,38 +1764,12 @@ object StatOps {
     * DECIMAL(38,12) (the [[chi2Assoc]] device), so the statistic is
     * order-of-aggregation-independent.
     *
-    * Scale shape (VERDICT r14 #2 — [[DistRank]] migration, the
-    * two-pass histogram the old scaladoc promised): one map-combined
-    * hash aggregate to the (group, value) histogram, a second tiny
-    * aggregate to the distinct-value grid, [[DistRank.prefixLt]] for
-    * the global cumulative counts (bucketed — no single-task sort),
-    * one equi-join of the two histograms on the value key, then the
-    * k-row group grid. The tie spectrum reads the same value grid.
-    * Bit-identical to the window form (DistRankSpec).
+    * Scale shape: the [[pooledRankSums]] block, then the k-row group
+    * grid. Bit-identical to the window form (DistRankSpec).
     */
   def kruskalWallis(s: SparkSession, dir: String): DataFrame = {
     val d = DecimalType(38, 0)
-    val ev = Tables.t(s, dir, "events")
-      .select(col("event_type").as("grp"),
-        round(col("value") * 1000000).cast(LongType).as("vm"))
-    // one fact pass; every later relation is histogram-sized
-    val histGV = graft.plans.Checkpoint.pin(ev.groupBy(col("grp"), col("vm"))
-      .agg(count(lit(1)).as("cg")))
-    // histV feeds two structurally different consumers (the per-group
-    // rank-sum join and the tie aggregate, the latter re-executed by
-    // the broadcast build) — pinned per the structurally-
-    // different-repeats rule so the prefix-sum device lineage runs
-    // once (the dunnTest shape)
-    val histV = graft.plans.Checkpoint.pin(DistRank.prefixLt(
-      histGV.groupBy(col("vm")).agg(sum(col("cg")).as("eq")),
-      Nil, "vm", Seq("eq"))
-      .withColumn("r2", lit(2L) * col("eq_lt") + col("eq") + lit(1L)))
-    val grp = histGV.join(histV.select(col("vm"), col("r2")), "vm")
-      .groupBy(col("grp"))
-      .agg(sum(col("cg")).as("n"), sum(col("r2").cast(d) * col("cg")).as("s2"))
-    val ties = histV
-      .agg(coalesce(sum(col("eq").cast(d) * col("eq") * col("eq") - col("eq")),
-        lit(0).cast(d)).as("tie3"))
+    val (grp, ties) = pooledRankSums(s, dir)
     val wall = Window.partitionBy()
     val h = lit(3.0) * col("ssd") /
       (col("nn").cast(d) * (col("nn") + 1)).cast(DoubleType) -
@@ -1839,39 +1849,49 @@ object StatOps {
     * chunked-draw explode (one md5 is 128 bits = FOUR independent
     * 8-hex-digit uniforms, so resample r reads window (r−1) mod 4 of
     * md5(key:boot⌊(r−1)/4⌋) — ⌈R/4⌉ = 7 hashes per row instead of 25,
-    * the [[EdfOps.cvmPermutation]] r17 device), then map-side
+    * the [[EdfOps.cvmPermutation]] device), then map-side
     * combines straight down to the (priority × r) grid — shuffle
     * volume is k·R rows, not n·R; the envelope/SE pass runs on that
     * grid. This is why Poisson beats index-resampling at 100 TB: no
     * shuffle ever carries resampled data rows.
     */
-  def bootstrapPoisson(s: SparkSession, dir: String): DataFrame = {
+  def bootstrapPoisson(s: SparkSession, dir: String): DataFrame =
+    bootstrapPoissonWith(s, dir, PoissonHex.map(lit), { oFan =>
+      val hashed = (0 until (BootR + 3) / 4).foldLeft(oFan) { (d2, k) =>
+        d2.withColumn(s"__h$k",
+          md5(concat(col("o_orderkey").cast("string"), lit(s":boot$k"))))
+      }
+      (hashed, (1 to BootR).map(r =>
+        substring(col(s"__h${(r - 1) / 4}"), ((r - 1) % 4) * 8 + 1, 8)))
+    })
+
+  /** The Poisson-bootstrap body both hash twins share. `draws` adds the
+    * hash columns to the spread (pri, o_orderkey, cents) order rows and
+    * names the uniform draw of each resample r in 1..[[BootR]]; a draw
+    * below `cdf(k)` (and none before) gives weight k, else 6. The body
+    * combines the weighted rows to the (priority × r) grid, the
+    * resample envelope and SE, and one output row per priority.
+    */
+  private def bootstrapPoissonWith(s: SparkSession, dir: String, cdf: Seq[Column],
+      draws: DataFrame => (DataFrame, Seq[Column])): DataFrame = {
     val d = DecimalType(38, 0)
     val d12 = DecimalType(38, 12)
     val o = Tables.t(s, dir, "orders")
       .select(col("o_orderpriority").as("pri"), col("o_orderkey"),
         round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-    val nCh = (BootR + 3) / 4
-    // spread the fact BEFORE the ⌈R/4⌉-hash fan (guide §2.5's
-    // unsplittable-input remedy): the bench's single-row-group parquet
-    // scans as ONE task, so without this the whole n·⌈R/4⌉ md5 fan ran
-    // serially (r18 profile: a 2.4 s one-task stage = ~75% of the
-    // gate). Hash-repartition on the deterministic key — row set
-    // unchanged, and on a many-file production layout the exchange
-    // moves only the already-projected 3-column rows.
-    val oFan = graft.operators.Spread.byKey(o, col("o_orderkey"))
-    val hashed = (0 until nCh).foldLeft(oFan) { (d2, k) =>
-      d2.withColumn(s"__h$k",
-        md5(concat(col("o_orderkey").cast("string"), lit(s":boot$k"))))
-    }
-    val u8s = (1 to BootR).map(r =>
-      substring(col(s"__h${(r - 1) / 4}"), ((r - 1) % 4) * 8 + 1, 8))
-    val w = PoissonHex.zipWithIndex.foldRight(lit(6L): Column) {
-      case ((hex, k), rest) => when(col("__u8") < hex, k.toLong).otherwise(rest)
+    // spread the fact BEFORE the hash fan (guide §2.5's unsplittable-
+    // input remedy): a single-row-group parquet scans as ONE task, so
+    // without this the whole n·⌈R/words⌉ hash fan runs serially.
+    // Hash-repartition on the deterministic key — row set unchanged,
+    // and on a many-file production layout the exchange moves only the
+    // already-projected 3-column rows.
+    val (hashed, us) = draws(graft.operators.Spread.byKey(o, col("o_orderkey")))
+    val w = cdf.zipWithIndex.foldRight(lit(6L): Column) {
+      case ((t, k), rest) => when(col("__u") < t, k.toLong).otherwise(rest)
     }
     val res = hashed
       .select(col("pri"), col("cents"),
-        posexplode(array(u8s: _*)).as(Seq("__r0", "__u8")))
+        posexplode(array(us: _*)).as(Seq("__r0", "__u")))
       .select(col("pri"), (col("__r0") + 1).cast(LongType).as("r"),
         w.as("w"), col("cents"))
       .groupBy(col("pri"), col("r"))
@@ -2280,7 +2300,7 @@ object StatOps {
        |FROM agg""".stripMargin
 
   // the SAME Poisson(1) CDF thresholds as [[PoissonHex]], as 32-bit
-  // integers for the chunked xxhash64 word draw (r17): u32 < t ≡
+  // integers for the chunked xxhash64 word draw: u32 < t ≡
   // u8hex < hex, so the twin's weight law is bit-identical to the
   // gate's
   private val PoissonXx32: Seq[Long] =
@@ -2298,60 +2318,17 @@ object StatOps {
     * so it lives in the bench-only battery with the other xxhash twins
     * and Round13GatesSpec pins its agreement with the gated twin.
     */
-  def bootstrapPoissonXx(s: SparkSession, dir: String): DataFrame = {
-    val d = DecimalType(38, 0)
-    val d12 = DecimalType(38, 12)
-    val o = Tables.t(s, dir, "orders")
-      .select(col("o_orderpriority").as("pri"), col("o_orderkey"),
-        round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-    val nCh = (BootR + 1) / 2
-    // same pre-fan spread as the md5 gate (one-row-group scan = serial
-    // fan otherwise)
-    val oFan = graft.operators.Spread.byKey(o, col("o_orderkey"))
-    val hashed = (0 until nCh).foldLeft(oFan) { (d2, k) =>
-      d2.withColumn(s"__h$k",
-        xxhash64(col("o_orderkey"), lit("boot"), lit(k)))
-    }
-    val us = (1 to BootR).map { r =>
-      val h = col(s"__h${(r - 1) / 2}")
-      if ((r - 1) % 2 == 0) shiftrightunsigned(h, 32)
-      else pmod(h, lit(4294967296L))
-    }
-    val w = PoissonXx32.zipWithIndex.foldRight(lit(6L): Column) {
-      case ((thr, k), rest) => when(col("__u") < thr, k.toLong).otherwise(rest)
-    }
-    val res = hashed
-      .select(col("pri"), col("cents"),
-        posexplode(array(us: _*)).as(Seq("__r0", "__u")))
-      .select(col("pri"), (col("__r0") + 1).cast(LongType).as("r"),
-        w.as("w"), col("cents"))
-      .groupBy(col("pri"), col("r"))
-      .agg(sum(col("w").cast(d)).as("sw"),
-        sum((col("w") * col("cents")).cast(d)).as("swc"))
-      .withColumn("mean_r",
-        col("swc").cast(DoubleType) / col("sw").cast(DoubleType))
-    val wpri = Window.partitionBy(col("pri"))
-    val boot = res
-      .withColumn("mbar", sum(col("mean_r").cast(d12)).over(wpri)
-        .cast(DoubleType) / lit(BootR.toDouble))
-      .groupBy(col("pri"))
-      .agg(max(col("mbar")).as("mbar"),
-        sum(((col("mean_r") - col("mbar")) * (col("mean_r") - col("mbar")))
-          .cast(d12)).as("sdev2"),
-        min(col("mean_r")).as("lo"), max(col("mean_r")).as("hi"))
-    val full = o.groupBy(col("pri"))
-      .agg(count(lit(1)).as("n"), sum(col("cents").cast(d)).as("sc"))
-    full.join(boot, "pri")
-      .select(col("pri").as("o_orderpriority"), col("n"),
-        round(col("sc").cast(DoubleType) / col("n").cast(DoubleType)
-          / 100.0, 6).as("mean_price"),
-        round(col("mbar") / 100.0, 6).as("boot_mean"),
-        round(sqrt(col("sdev2").cast(DoubleType) / lit((BootR - 1).toDouble))
-          / 100.0, 6).as("boot_se"),
-        round(col("lo") / 100.0, 6).as("boot_lo"),
-        round(col("hi") / 100.0, 6).as("boot_hi"))
-      .orderBy(col("o_orderpriority"))
-  }
+  def bootstrapPoissonXx(s: SparkSession, dir: String): DataFrame =
+    bootstrapPoissonWith(s, dir, PoissonXx32.map(lit), { oFan =>
+      val hashed = (0 until (BootR + 1) / 2).foldLeft(oFan) { (d2, k) =>
+        d2.withColumn(s"__h$k", xxhash64(col("o_orderkey"), lit("boot"), lit(k)))
+      }
+      (hashed, (1 to BootR).map { r =>
+        val h = col(s"__h${(r - 1) / 2}")
+        if ((r - 1) % 2 == 0) shiftrightunsigned(h, 32)
+        else pmod(h, lit(4294967296L))
+      })
+    })
 
   /** Production-hash twins: not DuckDB-expressible (xxhash64), timed
     * by Bench next to the md5-gated versions — see

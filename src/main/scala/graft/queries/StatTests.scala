@@ -1165,41 +1165,20 @@ object StatTests {
     * (the `ops_fdr_bh` device, 2/(1+e^{1.702|z|})) decide `rejected`
     * relationally on both engines.
     *
-    * Scale shape (VERDICT r14 #2 — [[graft.queries.DistRank]]
-    * migration, the `ops_kruskal_wallis` two-pass histogram): one
-    * map-combined hash aggregate to the (group, value) histogram, a
-    * tiny aggregate to the distinct-value grid with bucketed prefix
-    * sums for the GLOBAL midranks — no single-task sort — one
-    * histogram equi-join, then the k-row type grid joined against
+    * Scale shape: the [[StatOps.pooledRankSums]] block shared with
+    * `ops_kruskal_wallis`, then the k-row type grid joined against
     * itself (k² rows, categorical k) with the 1-row N/tie totals
     * broadcast on. Bit-identical (DistRankSpec).
     */
   def dunnTest(s: SparkSession, dir: String): DataFrame = {
     val d0 = DecimalType(38, 0)
-    val ev = Tables.t(s, dir, "events")
-      .select(col("event_type").as("grp"),
-        round(col("value") * 1000000).cast(LongType).as("vm"))
-    // one fact pass; every later relation is histogram-sized
-    val histGV = graft.plans.Checkpoint.pin(ev.groupBy(col("grp"), col("vm"))
-      .agg(count(lit(1)).as("cg")))
-    // histV feeds TWO structurally different consumers (the per-group
-    // rank-sum join and the tie aggregate), and g feeds FOUR (tot, the
-    // probe side, the broadcast build, and through them the final
-    // select) — each reference re-executes the whole
-    // prefix-sum device lineage as its own query stage. Pin both
+    val (g0, ties) = StatOps.pooledRankSums(s, dir)
+    // g feeds FOUR consumers (tot, the probe side, the broadcast build,
+    // and through them the final select) — each reference would
+    // re-execute the rank-sum lineage as its own query stage; pinned
     // per the structurally-different-repeats rule (Checkpoint.pin
-    // scaladoc); they are distinct-value- and |groups|-sized.
-    val histV = graft.plans.Checkpoint.pin(DistRank.prefixLt(
-      histGV.groupBy(col("vm")).agg(sum(col("cg")).as("eq")),
-      Nil, "vm", Seq("eq"))
-      .withColumn("r2", lit(2L) * col("eq_lt") + col("eq") + lit(1L)))
-    val g = graft.plans.Checkpoint.pin(
-      histGV.join(histV.select(col("vm"), col("r2")), "vm")
-        .groupBy(col("grp"))
-        .agg(sum(col("cg")).as("n"), sum(col("r2").cast(d0) * col("cg")).as("s2")))
-    val ties = histV
-      .agg(coalesce(sum(col("eq").cast(d0) * col("eq") * col("eq") - col("eq")),
-        lit(0).cast(d0)).as("tie3"))
+    // scaladoc). It is |groups|-sized.
+    val g = graft.plans.Checkpoint.pin(g0)
     val tot = g.agg(sum(col("n")).as("nn"), count(lit(1)).as("k"))
     val gi = g.select(col("grp").as("grp_a"), col("n").as("n_a"),
       col("s2").as("s2_a"))

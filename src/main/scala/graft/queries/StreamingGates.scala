@@ -1024,9 +1024,9 @@ object StreamingGates {
     val e = Tables.t(s, dir, "events")
       .select(col("event_type"), date_trunc("hour", col("ts")).as("hour"),
         col("value"))
-    Pctl.distBounded(e, Seq("event_type", "hour"), "value",
+    Pctl.dist(e, Seq("event_type", "hour"), "value",
         Seq("p50" -> 0.5, "p95" -> 0.95, "p99" -> 0.99),
-        countAs = Some("n_events"))
+        bounded = true, countAs = Some("n_events"))
       .select(col("event_type"), col("hour"), col("n_events"),
         col("p50"), col("p95"), col("p99"))
       .orderBy(col("event_type"), col("hour"))
@@ -1077,14 +1077,14 @@ object StreamingGates {
     // (post-join aggregates) that ReuseExchange cannot unify — there
     // the pinned histogram IS the one-fact-pass repair.
     val bars = hourlyBars(s, dir)
-    val med = Pctl.distBounded(
+    val med = Pctl.dist(
       bars.select(col("event_type").as("m_type"), col("bar")),
-      Seq("m_type"), "bar", Seq("med" -> 0.5))
+      Seq("m_type"), "bar", Seq("med" -> 0.5), bounded = true)
     val dev = bars.join(med, col("m_type") === col("event_type")).drop("m_type")
       .withColumn("dev", round(abs(col("bar") - col("med")), 6))
-    val mad = Pctl.distBounded(
+    val mad = Pctl.dist(
       dev.select(col("event_type").as("d_type"), col("dev")),
-      Seq("d_type"), "dev", Seq("mad" -> 0.5))
+      Seq("d_type"), "dev", Seq("mad" -> 0.5), bounded = true)
     dev.join(mad, col("d_type") === col("event_type")).drop("d_type")
       .select(col("event_type"), col("hour"), col("bar"), col("med"), col("mad"),
         when(col("mad") > 0, round(col("dev") / col("mad"), 6)).as("score"),
@@ -1583,9 +1583,9 @@ object StreamingGates {
     // r17: the median rides the bounded percentile device (calendar-
     // bounded bar relation) — see madAnomaly
     val bars = hourlyBars(s, dir)
-    val med = Pctl.distBounded(
+    val med = Pctl.dist(
       bars.select(col("event_type").as("m_type"), col("bar")),
-      Seq("m_type"), "bar", Seq("med" -> 0.5))
+      Seq("m_type"), "bar", Seq("med" -> 0.5), bounded = true)
     val signed = bars.join(med, col("m_type") === col("event_type"))
       .filter(col("bar") =!= col("med"))
       .select(col("event_type"), col("hour"),

@@ -94,9 +94,9 @@ class PctlDistSpec extends SparkSpec {
 
   test("distBounded == percentile == dist (Long values, grouped ties)") {
     val rows = longRows(20000, 5, 37)
-    assertSame(Pctl.distBounded(rows, Seq("g"), "v", Qs),
+    assertSame(Pctl.dist(rows, Seq("g"), "v", Qs, bounded = true),
       aggForm(rows, Seq("g"), Qs), Seq("g"))
-    assertSame(Pctl.distBounded(rows, Seq("g"), "v", Qs),
+    assertSame(Pctl.dist(rows, Seq("g"), "v", Qs, bounded = true),
       Pctl.dist(rows, Seq("g"), "v", Qs), Seq("g"))
   }
 
@@ -104,11 +104,11 @@ class PctlDistSpec extends SparkSpec {
     val rows = doubleRows(20000, 4, 9973)
       .withColumn("v", when(pmod(xxhash64(col("v")), lit(11L)) === 0,
         lit(null).cast(DoubleType)).otherwise(col("v")))
-    assertSame(Pctl.distBounded(rows, Seq("g"), "v", Qs),
+    assertSame(Pctl.dist(rows, Seq("g"), "v", Qs, bounded = true),
       aggForm(rows, Seq("g"), Qs), Seq("g"))
     val tiny = spark.range(3).select(
       concat(lit("t"), col("id")).as("g"), (col("id") * 7 + 1).as("v"))
-    assertSame(Pctl.distBounded(tiny, Seq("g"), "v", Qs),
+    assertSame(Pctl.dist(tiny, Seq("g"), "v", Qs, bounded = true),
       aggForm(tiny, Seq("g"), Qs), Seq("g"))
   }
 
@@ -131,6 +131,21 @@ class PctlDistSpec extends SparkSpec {
       aggForm(expanded, Nil, Qs), Nil)
     assertSame(Pctl.distHist(rows, Seq("g"), "v", "w", Qs, bounded = true),
       aggForm(expanded, Seq("g"), Qs), Seq("g"))
+  }
+
+  test("the bounded regime rejects global calls on every front door") {
+    // an unpartitioned window over the whole histogram is the
+    // single-reducer class the regime exists to avoid — both dist and
+    // distHist must refuse it at build time, not plan it silently
+    val rows = longRows(100, 2, 13).withColumn("w", lit(2L))
+    val viaDist = intercept[IllegalArgumentException] {
+      Pctl.dist(rows, Nil, "v", Seq("p50" -> 0.5), bounded = true)
+    }
+    val viaHist = intercept[IllegalArgumentException] {
+      Pctl.distHist(rows, Nil, "v", "w", Seq("p50" -> 0.5), bounded = true)
+    }
+    Seq(viaDist, viaHist).foreach(e =>
+      assert(e.getMessage.contains("grouped calls"), e.getMessage))
   }
 
   private def rootMessages(t: Throwable): String =

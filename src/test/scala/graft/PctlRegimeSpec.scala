@@ -2,16 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Device-regime census for the exact-percentile surface (VERDICT r17
-  * #3): the choice between the four percentile devices is a measured
-  * decision table (see the [[graft.queries.Pctl]] scaladoc), not call-
-  * site taste — buffering `percentile` for grid-sized groups,
-  * `distBounded` for corpus-size-independent value domains, sparse
-  * `dist` for near-distinct fact domains, `distHist` for
-  * pre-aggregated weights. r17 re-learned parts of that table by
-  * bench regression; this census pins EVERY existing call site to its
-  * documented regime so the next device call must name its regime
-  * here instead.
+/** Regime census for the exact-percentile surface: the choice between
+  * the percentile regimes is a measured decision table (see the
+  * [[graft.queries.Pctl]] scaladoc), not call-site taste — buffering
+  * `percentile` for grid-sized groups, `dist(..., bounded = true)` for
+  * corpus-size-independent value domains, the sparse `dist` default for
+  * near-distinct fact domains, `distHist` (bounded or sparse) for
+  * pre-aggregated weights. This census pins EVERY call site to its
+  * documented regime, read from the call's own `bounded = true`
+  * argument, so the next call must name its regime here.
   *
   * Complemented by two mechanical siblings: PlanAuditSpec's
   * exact-Percentile census pins where the BUFFERING aggregate may
@@ -25,7 +24,7 @@ class PctlRegimeSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala/graft")
 
-  // Declared call-site census: file -> device -> count, each entry
+  // Declared call-site census: file -> regime -> count, each entry
   // justified by its regime. Adding/removing a Pctl device call
   // anywhere under src/main/scala/graft MUST update this table with
   // the regime the new site sits on (consult the Pctl decision table).
@@ -37,42 +36,70 @@ class PctlRegimeSpec extends AnyFunSuite {
     // bowleySkew: the same near-distinct cents domain, pinned join
     // input (dist); tukeyFences/qqDeciles(×2)/lenProfile/lengthFilter:
     // 2-dp event values resp. document-length counts — corpus-size-
-    // independent domains (distBounded); tokenWeightedLen: weighted
+    // independent domains (dist bounded); tokenWeightedLen: weighted
     // length histogram, bounded domain (distHist bounded);
     // weightedQuantiles: quantity-weighted near-distinct cents
-    // (distHist sparse over a raw column-pruned scan); weightedPsi
-    // (r18): rest token mass on the bounded length domain — grid
-    // algebra like psiDrift (distHist bounded)
-    "queries/QuantileOps.scala" ->
-      Map("dist" -> 1, "distBounded" -> 5, "distHist" -> 3),
+    // (distHist sparse over a raw column-pruned scan); weightedPsi:
+    // rest token mass on the bounded length domain — grid algebra
+    // like psiDrift (distHist bounded)
+    "queries/QuantileOps.scala" -> Map("dist" -> 1, "dist bounded" -> 5,
+      "distHist" -> 1, "distHist bounded" -> 2),
     // quantileReservoir's exact leg: l_extendedprice — the canonical
-    // near-distinct stress domain (VERDICT r16) → sparse dist over a
-    // raw column-pruned scan
+    // near-distinct stress domain → sparse dist over a raw
+    // column-pruned scan
     "queries/Sketches.scala" -> Map("dist" -> 1),
-    // histogramEqui bounds: 2-dp event values (distBounded);
+    // histogramEqui bounds: 2-dp event values (dist bounded);
     // psiDrift fences: rest counts are grid algebra over the 2-dp
-    // bucket domain (distHist bounded); outlierBounds med + MAD (r18):
-    // one pinned (type, 2-dp value) histogram feeds both — weighted
+    // bucket domain (distHist bounded); outlierBounds med + MAD: one
+    // pinned (type, 2-dp value) histogram feeds both — weighted
     // medians on the bounded domain (distHist bounded ×2)
-    "queries/DataOps.scala" -> Map("distBounded" -> 1, "distHist" -> 3),
-    // trimmedMean fences: 2-dp event values (distBounded)
-    "queries/StatOps.scala" -> Map("distBounded" -> 1),
+    "queries/DataOps.scala" -> Map("dist bounded" -> 1, "distHist bounded" -> 3),
+    // trimmedMean fences: 2-dp event values (dist bounded)
+    "queries/StatOps.scala" -> Map("dist bounded" -> 1),
     // q1-extended percentiles: l_quantity 1..50 — a spec-bounded
-    // domain (distBounded)
-    "queries/RelationalExt.scala" -> Map("distBounded" -> 1),
+    // domain (dist bounded)
+    "queries/RelationalExt.scala" -> Map("dist bounded" -> 1),
     // hourly quantiles, MAD anomaly med+MAD, rolling seam median: all
-    // 2-dp event values per (type, hour)-ish groups (distBounded)
-    "queries/StreamingGates.scala" -> Map("distBounded" -> 4))
+    // 2-dp event values per (type, hour)-ish groups (dist bounded)
+    "queries/StreamingGates.scala" -> Map("dist bounded" -> 4))
 
   // buffering `percentile` sites are censused plan-level in
   // PlanAuditSpec.percentileAggAllowed (ops_sen_slope / st_trend_mk:
   // calendar²-bounded pair grids — the one regime where buffering
-  // measured FASTER than every histogram device, r17)
+  // measured FASTER than every histogram device)
 
-  private val devicePatterns = Seq(
-    "dist" -> """Pctl\.dist\(""".r,
-    "distBounded" -> """Pctl\.distBounded\(""".r,
-    "distHist" -> """Pctl\.distHist\(""".r)
+  private val deviceCall = """Pctl\.(dist|distHist)\(""".r
+  private val boundedArg = """\bbounded\s*=\s*([^,)\s]+)""".r
+
+  /** The regime of every device call in `text`: the device name, plus
+    * " bounded" when the call passes `bounded = true` (any other
+    * `bounded = x` is reported verbatim, so it must be declared as such).
+    */
+  private def regimes(text: String): Seq[String] = {
+    // full-line comments may hold parentheses; they are not code
+    val code = text.linesIterator.filterNot { l =>
+      val t = l.trim; t.startsWith("//") || t.startsWith("*")
+    }.mkString("\n")
+    deviceCall.findAllMatchIn(code).map { m =>
+      var depth = 1
+      var i = m.end
+      while (depth > 0) {
+        code(i) match {
+          case '"' => i = code.indexOf('"', i + 1)
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case _ =>
+        }
+        i += 1
+      }
+      val args = code.substring(m.end, i - 1)
+      m.group(1) + (boundedArg.findFirstMatchIn(args).map(_.group(1)) match {
+        case None => ""
+        case Some("true") => " bounded"
+        case Some(x) => s" bounded = $x"
+      })
+    }.toSeq
+  }
 
   test("every Pctl device call site sits on a declared regime (exact census)") {
     assert(java.nio.file.Files.isDirectory(root),
@@ -82,10 +109,7 @@ class PctlRegimeSpec extends AnyFunSuite {
     try {
       stream.filter(p => p.toString.endsWith(".scala")).forEach { p =>
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val counts = devicePatterns.flatMap { case (name, re) =>
-          val n = re.findAllMatchIn(text).size
-          if (n > 0) Some(name -> n) else None
-        }.toMap
+        val counts = regimes(text).groupBy(identity).map { case (r, xs) => r -> xs.size }
         if (counts.nonEmpty)
           actual(root.relativize(p).toString.replace('\\', '/')) = counts
       }
