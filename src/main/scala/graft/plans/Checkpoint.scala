@@ -1,18 +1,19 @@
 package graft.plans
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-import java.lang.ref.WeakReference
-
+import scala.annotation.tailrec
 import scala.collection.mutable.ArrayBuffer
 
 /** The one owner of everything a query holds between its stages: the
-  * frames it pins ([[pin]]) and the lineage truncations it takes
-  * ([[truncate]], [[truncateCounted]]). Query functions return LAZY
-  * plans; each hold they take is recorded in the CALLING THREAD's
-  * scope, and [[release]] frees exactly that scope.
+  * frames it pins ([[pin]]), the lineage truncations it takes
+  * ([[truncate]]) and the rounds of its iterative loops ([[rounds]],
+  * [[fixpoint]]). Query functions return LAZY plans; each hold they
+  * take is recorded in the CALLING THREAD's scope, and [[release]]
+  * frees exactly that scope.
   *
   * Contract for the mains and embedders: build a query, materialize its
   * result, then call [[release]] on the thread that BUILT it. Release
@@ -23,13 +24,18 @@ import scala.collection.mutable.ArrayBuffer
   * other's intermediates, with one exception. Plan-identical pins from
   * different threads share one CacheManager entry (only the first pin
   * records it), and the first thread's release frees it; the other
-  * thread then recomputes from lineage (slower, never wrong).
-  * Truncations are recorded weakly: a loop round the query no longer
-  * references is freed by Spark's ContextCleaner once garbage
-  * collected, and [[release]] frees every round still alive. A frame read
-  * after its scope was released recomputes from lineage, except that a
-  * released local checkpoint is gone: consume a result before
+  * thread then recomputes from lineage (slower, never wrong). A frame
+  * read after its scope was released recomputes from lineage, except
+  * that a released local checkpoint is gone: consume a result before
   * releasing the scope that built it.
+  *
+  * Loop rounds are the one hold freed before [[release]], so a loop
+  * holds O(1) rounds. [[rounds]] frees round r−1 once round r is
+  * materialized; its last round is LAZY, so it fuses into the result
+  * plan (one job fewer, reading e.g. a pinned edge relation in place),
+  * and round n−1, which it reads, stays held. [[fixpoint]] frees the
+  * previous round once the convergence test has read it; the converged
+  * round stays held. A caller's `init` to [[rounds]] is the caller's.
   *
   * Truncation reliability is chosen by the SESSION, not the call site:
   *  - with a checkpoint directory on the SparkContext
@@ -40,11 +46,10 @@ import scala.collection.mutable.ArrayBuffer
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` or the
   *    job's own directory lifecycle;
   *  - otherwise (tests, local exploration) `localCheckpoint` keeps the
-  *    round in executor storage until [[release]] (or until a
-  *    superseded round is garbage collected).
+  *    round in executor storage until it is freed as above.
   * Either way a round is materialized before the caller moves on
-  * ([[truncate]] eagerly, [[truncateCounted]] through its count), so a
-  * truncated frame never re-reads the lineage it cut.
+  * ([[truncate]] eagerly, [[fixpoint]] rounds through their count),
+  * so a truncated frame never re-reads the lineage it cut.
   */
 object Checkpoint {
 
@@ -57,8 +62,8 @@ object Checkpoint {
     */
   val ReliableConf = "graft.checkpoint.reliable"
 
-  /** The calling thread's holds, each as the action that frees it. */
-  private val scope = ThreadLocal.withInitial(() => ArrayBuffer.empty[() => Unit])
+  /** The calling thread's holds, each as the held object and the action that frees it. */
+  private val scope = ThreadLocal.withInitial(() => ArrayBuffer.empty[(AnyRef, () => Unit)])
 
   /** True iff [[truncate]] will use reliable checkpoints. */
   def reliable(df: DataFrame): Boolean =
@@ -83,7 +88,7 @@ object Checkpoint {
   def pin(df: DataFrame): DataFrame = {
     if (df.storageLevel == StorageLevel.NONE) {
       df.persist(StorageLevel.MEMORY_AND_DISK)
-      scope.get() += (() => df.unpersist(false))
+      scope.get() += (df -> (() => df.unpersist(false)))
     }
     df
   }
@@ -94,22 +99,34 @@ object Checkpoint {
   def truncate(df: DataFrame): DataFrame =
     held(if (reliable(df)) df.checkpoint() else df.localCheckpoint())
 
-  /** [[truncate]] + row count in as few jobs as the checkpoint mode
-    * allows: an iterative loop pays its per-round fixed cost × rounds.
-    * On the localCheckpoint path the checkpoint is taken LAZILY and the
-    * count() action materializes it: count computes every partition
-    * (the checkpoint wrapper is a LogicalRDD, opaque to column pruning,
-    * so nothing is skipped), and local checkpoint blocks are saved as a
-    * side effect of that first full computation, so ONE job yields both
-    * the truncated relation and its cardinality. On the reliable path
-    * the checkpoint stays EAGER: a reliable checkpoint re-runs lineage
-    * to write files, so the lazy order would compute the round twice;
-    * there the count is a cheap second job over the checkpointed
-    * blocks.
+  /** `n` rounds of `step(previous round, r ∈ 1..n)` from `init`:
+    * rounds 1..n−1 truncated, round n returned lazy.
     */
-  def truncateCounted(df: DataFrame): (DataFrame, Long) = {
-    val t = held(if (reliable(df)) df.checkpoint() else df.localCheckpoint(false))
-    (t, t.count())
+  def rounds(init: DataFrame, n: Int)(step: (DataFrame, Int) => DataFrame): DataFrame = {
+    require(n >= 1, s"rounds: need at least one round, got $n")
+    step((1 until n).foldLeft(init) { (prev, r) =>
+      val next = truncate(step(prev, r))
+      if (r > 1) free(prev)
+      next
+    }, n)
+  }
+
+  /** Rounds of `step` from `init`, each truncated and counted in one
+    * job, until `done(prev, prevCount, next, nextCount)`; returns the
+    * converged round and the number of steps. Fails past `maxRounds`:
+    * a silent cap-exit would return a wrong answer.
+    */
+  def fixpoint(init: DataFrame, maxRounds: Int, name: String)(step: DataFrame => DataFrame)
+      (done: (DataFrame, Long, DataFrame, Long) => Boolean): (DataFrame, Int) = {
+    @tailrec def loop(prev: DataFrame, prevCount: Long, round: Int): (DataFrame, Int) = {
+      require(round <= maxRounds, s"$name did not converge in $maxRounds rounds")
+      val (next, nextCount) = truncateCounted(step(prev))
+      val converged = done(prev, prevCount, next, nextCount)
+      free(prev)
+      if (converged) (next, round) else loop(next, nextCount, round + 1)
+    }
+    val (first, firstCount) = truncateCounted(init)
+    loop(first, firstCount, 1)
   }
 
   /** Unpersist everything the calling thread's scope holds, newest
@@ -117,22 +134,45 @@ object Checkpoint {
     */
   def release(): Unit = {
     val holds = scope.get()
-    holds.reverseIterator.foreach(_())
+    holds.reverseIterator.foreach(_._2())
     holds.clear()
   }
 
-  /** Record the RDD a truncation persisted (local checkpoints keep
-    * their blocks in executor storage; reliable ones persist nothing).
-    * The reference is weak so superseded loop rounds stay collectable:
-    * the scope must not hold O(rounds) blocks until the release.
+  /** [[truncate]] + row count in as few jobs as the checkpoint mode
+    * allows: an iterative loop pays its per-round fixed cost × rounds.
+    * On the localCheckpoint path the checkpoint is taken LAZILY and the
+    * count of the checkpointed RDD materializes it: count computes
+    * every partition, and local checkpoint blocks are saved as a side
+    * effect of that first full computation, so ONE job yields both the
+    * truncated relation and its cardinality. Counting the RDD rather
+    * than the frame keeps that job one stage over the round, as an
+    * eager checkpoint is, with no aggregate exchange. On the reliable
+    * path the checkpoint stays EAGER: a reliable checkpoint re-runs
+    * lineage to write files, so the lazy order would compute the round
+    * twice; there the count is a cheap second job over the files.
     */
+  private def truncateCounted(df: DataFrame): (DataFrame, Long) = {
+    val t = held(if (reliable(df)) df.checkpoint() else df.localCheckpoint(false))
+    (t, rdd(t).count())
+  }
+
+  /** The RDD behind a truncated frame. */
+  private def rdd(t: DataFrame): RDD[_] =
+    t.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+
+  /** The blocks a truncation persisted (reliable checkpoints persist none). */
+  private def blocks(t: DataFrame): Option[RDD[_]] =
+    Some(rdd(t)).filter(_.getStorageLevel != StorageLevel.NONE)
+
+  /** Record `t`'s blocks in the calling thread's scope. */
   private def held(t: DataFrame): DataFrame = {
-    t.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-      .filter(_.getStorageLevel != StorageLevel.NONE)
-      .foreach { rdd =>
-        val w = new WeakReference(rdd)
-        scope.get() += (() => Option(w.get).foreach(_.unpersist(false)))
-      }
+    blocks(t).foreach(rdd => scope.get() += (rdd -> (() => rdd.unpersist(false))))
     t
+  }
+
+  /** Free a superseded loop round now and drop it from the scope. */
+  private def free(t: DataFrame): Unit = blocks(t).foreach { rdd =>
+    rdd.unpersist(false)
+    scope.get().filterInPlace(_._1 ne rdd)
   }
 }

@@ -529,23 +529,29 @@ object DataOps {
     * aggregate is fact-sized.
     */
   def psiDrift(s: SparkSession, dir: String): DataFrame = {
-    // r17 (VERDICT r16: the last named perf residual): the
-    // rest-of-corpus relation is never materialized as rows at all —
-    // rest counts are GRID ALGEBRA, c_rest(t, b) = l(b) − c_own(t, b)
-    // over the (type × 2-dp bucket) counts grid, so the former
-    // 4×-fact != fan (built twice: fences + binning) collapses to one
-    // fact hash-aggregate plus domain-bounded grid passes. The decile
-    // fences come from [[Pctl.distHist]] over the weighted rest
-    // histogram — bit-equal to the row-multiset percentile, so the
-    // oracle (which still writes the rest fan the readable way) is
-    // unchanged.
-    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "events")
+    psiVsRest(s, Tables.t(s, dir, "events")
       .select(col("event_type").as("t"),
         round(col("value") * 100).cast(LongType).as("b"))
       .groupBy(col("t"), col("b")).agg(count(lit(1)).as("c")))
+      .select(col("t").as("event_type"), col("psi"))
+      .orderBy(col("event_type"))
+  }
+
+  /** (t, n_own, psi): each segment t's add-one-smoothed PSI against
+    * the rest of the corpus, from `counts0` = (t, b, c), the mass c of
+    * segment t at integer value bucket b — [[psiDrift]]'s construction,
+    * shared with [[QuantileOps.weightedPsi]]. n_own is t's total mass.
+    * The rest-of-corpus relation is never built as rows: rest masses
+    * are grid algebra, c_rest(t, b) = l(b) − c_own(t, b), and the
+    * decile fences come from [[Pctl.distHist]] over that weighted rest
+    * histogram — bit-equal to the row-multiset percentile the oracles
+    * write.
+    */
+  private[queries] def psiVsRest(s: SparkSession, counts0: DataFrame): DataFrame = {
+    val counts = graft.plans.Checkpoint.pin(counts0)
     val allB = counts.groupBy(col("b")).agg(sum(col("c")).as("l"))
     val types = counts.select(col("t")).distinct()
-    // completed (type × bucket) grid with own and rest counts — the
+    // completed (segment × bucket) grid with own and rest mass — the
     // ops_ks_drift bounded-BNLJ grid shape; pinned: the fence device
     // and the binning pass both read it
     val grid0 = graft.plans.Checkpoint.pin(allB.crossJoin(broadcast(types))
@@ -556,15 +562,15 @@ object DataOps {
     val fences = graft.plans.Checkpoint.pin(
       Pctl.distHist(grid0, Seq("t"), "b", "c_rest",
           (1 to 9).map(i => s"f$i" -> i / 10.0),
-          // bounded: the histogram IS the 2-dp bucket domain — a
-          // per-type window over it is corpus-size-independent
+          // bounded: the histogram IS the bucket domain — a
+          // per-segment window over it is corpus-size-independent
           bounded = true)
         .select(col("t"), array((1 to 9).map(i => col(s"f$i")): _*).as("f")))
     val binOf = aggregate(col("f"), lit(0),
       (acc, x) => acc + when(col("b").cast(DoubleType) > x, 1).otherwise(0))
-    // the fence relation is 5 rows but its device plan carries no
-    // row-count stats AQE trusts — hint it (the r16 psi regression);
-    // own and rest bin in ONE pass over the counts grid
+    // the fence relation is |segments| rows but its device plan carries
+    // no row-count stats AQE trusts — hint it; own and rest bin in ONE
+    // pass over the counts grid
     val binned = grid0.join(broadcast(fences), "t")
       .select(col("t"), binOf.as("bin"), col("c_own"), col("c_rest"))
       .groupBy(col("t"), col("bin"))
@@ -580,11 +586,10 @@ object DataOps {
     val p = (col("c_own") + 1).cast(DoubleType) / (col("n_own") + 10).cast(DoubleType)
     val q = (col("c_rest") + 1).cast(DoubleType) / (col("n_rest") + 10).cast(DoubleType)
     grid.join(tot, "t")
-      .select(col("t"), ((p - q) * log(p / q)).as("term"))
+      .select(col("t"), col("c_own"), ((p - q) * log(p / q)).as("term"))
       .groupBy(col("t"))
-      .agg(round(sum(col("term").cast(DecimalType(38, 12))).cast(DoubleType), 6).as("psi"))
-      .select(col("t").as("event_type"), col("psi"))
-      .orderBy(col("event_type"))
+      .agg(sum(col("c_own")).as("n_own"),
+        round(sum(col("term").cast(DecimalType(38, 12))).cast(DoubleType), 6).as("psi"))
   }
 
   val psiDriftOracle: String =

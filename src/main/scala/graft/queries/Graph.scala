@@ -352,17 +352,15 @@ object Graph {
     * (Montresor et al. 2013).
     */
   def kCore(s: SparkSession, dir: String): DataFrame = {
-    var edges = supportEdges(s, dir)
-    for (_ <- 1 to CoreRounds) {
+    val core = graft.plans.Checkpoint.rounds(supportEdges(s, dir), CoreRounds) { (edges, _) =>
       val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= CoreK)
         .select(col("src").as("node"))
-      edges = graft.plans.Checkpoint.truncate(
-        edges
-          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+      edges
+        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
     }
-    edges.groupBy(col("src").as("node"))
+    core.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_deg"))
       .orderBy(col("node"))
   }
@@ -605,19 +603,17 @@ object Graph {
 
   /** (node, community, n_members) of [[LpaRounds]] synchronous rounds. */
   private def communities(edges: DataFrame): DataFrame = {
-    var labels = edges.select(col("src").as("node")).distinct()
+    val init = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    for (r <- 1 to LpaRounds) {
-      val counts = edges
+    val labels = graft.plans.Checkpoint.rounds(init, LpaRounds) { (labels, _) =>
+      edges
         .join(labels.select(col("node").as("dst"), col("label")), "dst")
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
-      val next = counts
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
             .orderBy(col("n").desc, col("label"))))
         .filter(col("rn") === 1)
         .select(col("src").as("node"), col("label"))
-      labels = if (r < LpaRounds) graft.plans.Checkpoint.truncate(next) else next
     }
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_members"))
     labels.join(sizes, "label")
@@ -994,34 +990,27 @@ object Graph {
     */
   def kTruss(s: SparkSession, dir: String): DataFrame = {
     val edges = graft.plans.Checkpoint.pin(supportEdges(s, dir))
-    var und = edges.filter(col("src") < col("dst"))
-    var lastSup: DataFrame = null
-    for (_ <- 1 to TrussRounds) {
-      val sym = und.unionByName(
-        und.select(col("dst").as("src"), col("src").as("dst")))
-      val wedge = sym.select(col("src").as("a"), col("dst").as("w"))
-        .join(sym.select(col("src").as("b"), col("dst").as("w")), "w")
-        .filter(col("a") < col("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
-      lastSup = und
-        .join(wedge, col("src") === col("a") && col("dst") === col("b"), "left")
-        .select(col("src"), col("dst"),
-          coalesce(col("sup"), lit(0L)).as("support"))
-      und = graft.plans.Checkpoint.truncate(
-        lastSup.filter(col("support") >= TrussK - 2)
-          .select(col("src"), col("dst")))
-    }
+    // truncated, not lazy: the final support count reads it three times
+    val und = graft.plans.Checkpoint.truncate(graft.plans.Checkpoint.rounds(
+        edges.filter(col("src") < col("dst")), TrussRounds) { (und, _) =>
+      trussSupport(und).filter(col("support") >= TrussK - 2)
+        .select(col("src"), col("dst"))
+    })
     // final support re-counted on the SURVIVING subgraph
-    val symF = und.unionByName(
+    trussSupport(und).orderBy(col("src"), col("dst"))
+  }
+
+  /** (src, dst, support): each edge of `und` with its triangle count. */
+  private def trussSupport(und: DataFrame): DataFrame = {
+    val sym = und.unionByName(
       und.select(col("dst").as("src"), col("src").as("dst")))
-    val wedgeF = symF.select(col("src").as("a"), col("dst").as("w"))
-      .join(symF.select(col("src").as("b"), col("dst").as("w")), "w")
+    val wedge = sym.select(col("src").as("a"), col("dst").as("w"))
+      .join(sym.select(col("src").as("b"), col("dst").as("w")), "w")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
     und
-      .join(wedgeF, col("src") === col("a") && col("dst") === col("b"), "left")
+      .join(wedge, col("src") === col("a") && col("dst") === col("b"), "left")
       .select(col("src"), col("dst"), coalesce(col("sup"), lit(0L)).as("support"))
-      .orderBy(col("src"), col("dst"))
   }
 
   val kTrussOracle: String = {

@@ -618,40 +618,27 @@ object LlmDedup {
     // pipeline (measured 9s -> ~4s at sf0.1)
     val sym = graft.plans.Checkpoint.pin(pairs.unionByName(
       pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
-    // each round is eagerly truncated (Checkpoint.truncate): in-loop
-    // truncation bounds lineage, so a cache miss never recomputes
-    // earlier rounds, and each round materializes before the next
-    // reads it
-    var labels = graft.plans.Checkpoint.truncate(
-      sym.select(col("doc_a").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id")))
-    var converged = false
-    var rounds = 0
-    val maxRounds = 50
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
+    // one round: every doc takes the minimum of its own and its
+    // neighbors' labels; the new label and the changed flag come out of
+    // ONE join pass, so each round is one shuffle join + one aggregate.
+    // Min-label propagation needs O(cluster diameter) rounds, so
+    // hitting the cap means a pathological chain; the fix at that scale
+    // is large-star/small-star (O(log n) rounds), not a bigger cap
+    val init = sym.select(col("doc_a").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("label"), lit(false).as("chg"))
+    val (labels, _) = graft.plans.Checkpoint.fixpoint(init, 50,
+        "dedupClusters min-label propagation") { labels =>
       val neighborMin = sym
         .join(labels, sym("doc_b") === labels("doc_id"))
         .groupBy(col("doc_a")).agg(min(col("label")).as("nlabel"))
         .withColumnRenamed("doc_a", "doc_id")
-      // new label and the changed flag come out of ONE join pass; the
-      // convergence check then reads the checkpointed result, so each
-      // round is exactly one shuffle join + one aggregate
-      val updated = graft.plans.Checkpoint.truncate(labels.alias("l")
+      labels.alias("l")
         .join(neighborMin.alias("n"), Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("l.label"), coalesce(col("n.nlabel"), col("l.label"))).as("label"),
-          (coalesce(col("n.nlabel"), col("l.label")) < col("l.label")).as("chg")))
-      converged = updated.filter(col("chg")).isEmpty
-      labels = updated.drop("chg")
-    }
-    // a silent cap-exit would return WRONG labels: min-label
-    // propagation needs O(cluster diameter) rounds, so hitting the cap
-    // means a pathological chain — fail loudly; the fix at that scale is
-    // large-star/small-star (O(log n) rounds), not a bigger cap
-    require(converged,
-      s"dedupClusters: min-label propagation did not converge in $maxRounds rounds")
-    labels
+          (coalesce(col("n.nlabel"), col("l.label")) < col("l.label")).as("chg"))
+    } { (_, _, next, _) => next.filter(col("chg")).isEmpty }
+    labels.drop("chg")
   }
 
   /** (doc_id, label) → one row per cluster: representative, size,
@@ -706,18 +693,12 @@ object LlmDedup {
     * by itself); nodes with no edge don't appear.
     */
   private[graft] def starLabels(pairs: DataFrame): DataFrame = {
-    // canonical a < b by ngramJaccard construction; per-round lineage
-    // truncation via Checkpoint.truncateCounted: the count that the
-    // convergence check needs anyway doubles as the action that
-    // materializes the (lazy) local checkpoint, so each round is ONE
-    // driver job, not materialize-then-count (the loop's wall is
-    // per-round fixed cost × rounds)
-    var (edges, edgeCount) = graft.plans.Checkpoint.truncateCounted(pairs.distinct())
-    var converged = false
-    var rounds = 0
-    val maxRounds = 30
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
+    // canonical a < b by ngramJaccard construction; the round count
+    // the convergence check needs doubles as the action that
+    // materializes the round, so each round is ONE Spark job (the
+    // loop's wall is per-round fixed cost × rounds)
+    val (edges, rounds) = graft.plans.Checkpoint.fixpoint(pairs.distinct(), 30,
+        "dedupClustersStar") { edges =>
       // LARGE-STAR over the symmetric neighbor relation: every
       // neighbor strictly larger than u re-links to m = min(N(u) ∪ {u}).
       // m rides a window min over the SAME u-partitioning the old
@@ -744,23 +725,18 @@ object LlmDedup {
       // the closing distinct()
       val wB = Window.partitionBy(col("b"))
       val withM = ls.withColumn("m", min(col("a")).over(wB))
+      withM.filter(col("a") =!= col("m"))
+        .select(col("m").as("na"), col("a").as("nb"))
+        .unionByName(withM.select(col("m").as("na"), col("b").as("nb")))
+        .distinct()
+        .select(col("na").as("a"), col("nb").as("b"))
+    } { (prev, prevCount, next, nextCount) =>
       // star forests are exactly the fixed points of both operators, so
       // set-equality of the (distinct) edge relations is convergence;
       // equal cardinality + one empty one-sided difference is enough,
       // and the count short-circuits the anti-join in non-final rounds
-      val (next, nextCount) = graft.plans.Checkpoint.truncateCounted(
-        withM.filter(col("a") =!= col("m"))
-          .select(col("m").as("na"), col("a").as("nb"))
-          .unionByName(withM.select(col("m").as("na"), col("b").as("nb")))
-          .distinct()
-          .select(col("na").as("a"), col("nb").as("b")))
-      converged = nextCount == edgeCount &&
-        next.join(edges, Seq("a", "b"), "left_anti").isEmpty
-      edgeCount = nextCount
-      edges = next
+      nextCount == prevCount && next.join(prev, Seq("a", "b"), "left_anti").isEmpty
     }
-    require(converged,
-      s"dedupClustersStar: did not reach a star forest in $maxRounds rounds")
     lastStarRounds.set(rounds)
     // the full-width distinct over the union is unnecessary — a
     // CONVERGED edge relation is a star forest (fixed point of

@@ -1090,14 +1090,15 @@ object LlmVectors {
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(round(col("margin"), 9).desc, col("vec_id"))
     // step 1: nothing picked, margin = rel
-    var picked = graft.plans.Checkpoint.truncate(
+    val first = graft.plans.Checkpoint.truncate(
       cand.select(col("q_id"), col("vec_id"), col("rel"))
         .withColumn("margin", col("rel"))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), col("rel"), col("margin"),
           lit(1).as("pick_rank")))
-    for (i <- 2 to MmrPicks) {
+    // round r appends pick r + 1, the candidate of largest margin
+    val picked = graft.plans.Checkpoint.rounds(first, MmrPicks - 1) { (picked, r) =>
       val maxSim = pairs
         .join(picked.select(col("q_id"), col("vec_id").as("vb")),
           Seq("q_id", "vb"))
@@ -1112,8 +1113,8 @@ object LlmVectors {
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), col("rel"), col("margin"),
-          lit(i).as("pick_rank"))
-      picked = graft.plans.Checkpoint.truncate(picked.unionByName(next))
+          lit(r + 1).as("pick_rank"))
+      picked.unionByName(next)
     }
     picked
       .select(col("q_id"), col("pick_rank"), col("vec_id"), col("rel"),

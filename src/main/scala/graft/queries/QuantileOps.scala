@@ -483,51 +483,11 @@ object QuantileOps {
     * does.
     */
   def weightedPsi(s: SparkSession, dir: String): DataFrame = {
-    val counts = graft.plans.Checkpoint.pin(Tables.t(s, dir, "documents")
+    DataOps.psiVsRest(s, Tables.t(s, dir, "documents")
       .select(col("source").as("t"), col("n_chars").as("b"),
         size(split(col("text"), " ")).cast("long").as("w"))
       .groupBy(col("t"), col("b")).agg(sum(col("w")).as("c")))
-    val allB = counts.groupBy(col("b")).agg(sum(col("c")).as("l"))
-    val types = counts.select(col("t")).distinct()
-    // completed (source × length) grid with own and rest token mass —
-    // the psiDrift bounded-BNLJ grid shape; pinned: the fence device
-    // and the binning pass both read it
-    val grid0 = graft.plans.Checkpoint.pin(allB.crossJoin(broadcast(types))
-      .join(counts, Seq("t", "b"), "left")
-      .select(col("t"), col("b"),
-        coalesce(col("c"), lit(0L)).as("c_own"),
-        (col("l") - coalesce(col("c"), lit(0L))).as("c_rest")))
-    val fences = graft.plans.Checkpoint.pin(
-      Pctl.distHist(grid0, Seq("t"), "b", "c_rest",
-          (1 to 9).map(i => s"f$i" -> i / 10.0),
-          // bounded: the histogram IS the length domain — a
-          // per-source window over it is corpus-size-independent
-          bounded = true)
-        .select(col("t"), array((1 to 9).map(i => col(s"f$i")): _*).as("f")))
-    val binOf = aggregate(col("f"), lit(0),
-      (acc, x) => acc + when(col("b").cast("double") > x, 1).otherwise(0))
-    // fence relation is |sources| rows with no trusted stats — hint it
-    // (the r16 psi regression); own and rest bin in ONE grid pass
-    val binned = grid0.join(broadcast(fences), "t")
-      .select(col("t"), binOf.as("bin"), col("c_own"), col("c_rest"))
-      .groupBy(col("t"), col("bin"))
-      .agg(sum(col("c_own")).as("c_own"), sum(col("c_rest")).as("c_rest"))
-    val grid = types.crossJoin(
-        s.range(0, 10).toDF("bin").select(col("bin").cast("int").as("bin")))
-      .join(binned, Seq("t", "bin"), "left")
-      .select(col("t"), col("bin"),
-        coalesce(col("c_own"), lit(0L)).as("c_own"),
-        coalesce(col("c_rest"), lit(0L)).as("c_rest"))
-    val tot = grid.groupBy(col("t"))
-      .agg(sum(col("c_own")).as("n_own"), sum(col("c_rest")).as("n_rest"))
-    val p = (col("c_own") + 1).cast("double") / (col("n_own") + 10).cast("double")
-    val q = (col("c_rest") + 1).cast("double") / (col("n_rest") + 10).cast("double")
-    grid.join(tot, "t")
-      .select(col("t"), col("c_own"), ((p - q) * log(p / q)).as("term"))
-      .groupBy(col("t"))
-      .agg(sum(col("c_own")).as("token_mass"),
-        round(sum(col("term").cast("decimal(38,12)")).cast("double"), 6).as("psi"))
-      .select(col("t").as("source"), col("token_mass"), col("psi"))
+      .select(col("t").as("source"), col("n_own").as("token_mass"), col("psi"))
       .orderBy(col("source"))
   }
 

@@ -955,6 +955,24 @@ object StatOps {
     * grid; the test arithmetic runs on 5 rows.
     */
   def welchTTest(s: SparkSession, dir: String): DataFrame = {
+    val seA = armSe("a")
+    val seB = armSe("b")
+    val tStat = (armMean("a") - armMean("b")) / sqrt(seA + seB)
+    val dof = (seA + seB) * (seA + seB) /
+      (seA * seA / (col("n_a") - 1).cast(DoubleType)
+        + seB * seB / (col("n_b") - 1).cast(DoubleType))
+    armMoments(s, dir).select(col("t").as("event_type"),
+      col("n_a").cast(LongType).as("n_a"), col("n_b").cast(LongType).as("n_b"),
+      round(armMean("a") / 1000000.0, 6).as("mean_a"),
+      round(armMean("b") / 1000000.0, 6).as("mean_b"),
+      round(tStat, 6).as("t_stat"), round(dof, 6).as("dof"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Per event type, (t, n_x, sx_x, sxx_x) for arms x ∈ {a, b}: exact
+    * micro-unit moments, sums in DECIMAL(38,0).
+    */
+  private[queries] def armMoments(s: SparkSession, dir: String): DataFrame = {
     val d = DecimalType(38, 0)
     val grid = Tables.t(s, dir, "events")
       .select(col("event_type").as("t"),
@@ -965,35 +983,29 @@ object StatOps {
         sum((col("vm").cast(d) * col("vm"))).as("sxx"))
     def pick(arm: String, f: String): Column =
       sum(when(col("arm") === arm, col(f)))
-    val row = grid.groupBy(col("t"))
+    grid.groupBy(col("t"))
       .agg(pick("A", "n").as("n_a"), pick("A", "sx").as("sx_a"),
         pick("A", "sxx").as("sxx_a"),
         pick("B", "n").as("n_b"), pick("B", "sx").as("sx_b"),
         pick("B", "sxx").as("sxx_b"))
-    def va(n: String, sx: String, sxx: String): Column =
-      (col(n) * col(sxx) - col(sx) * col(sx)).cast(DoubleType) /
-        (col(n) * (col(n) - 1)).cast(DoubleType)
-    val seA = va("n_a", "sx_a", "sxx_a") / col("n_a").cast(DoubleType)
-    val seB = va("n_b", "sx_b", "sxx_b") / col("n_b").cast(DoubleType)
-    val tStat = (col("sx_a").cast(DoubleType) / col("n_a").cast(DoubleType)
-      - col("sx_b").cast(DoubleType) / col("n_b").cast(DoubleType)) /
-      sqrt(seA + seB)
-    val dof = (seA + seB) * (seA + seB) /
-      (seA * seA / (col("n_a") - 1).cast(DoubleType)
-        + seB * seB / (col("n_b") - 1).cast(DoubleType))
-    row.select(col("t").as("event_type"), col("n_a").cast(LongType).as("n_a"),
-      col("n_b").cast(LongType).as("n_b"),
-      round(col("sx_a").cast(DoubleType) / col("n_a").cast(DoubleType)
-        / 1000000.0, 6).as("mean_a"),
-      round(col("sx_b").cast(DoubleType) / col("n_b").cast(DoubleType)
-        / 1000000.0, 6).as("mean_b"),
-      round(tStat, 6).as("t_stat"), round(dof, 6).as("dof"))
-      .orderBy(col("event_type"))
   }
 
+  /** Arm `x`'s mean and squared standard error over [[armMoments]], in
+    * micro-units, each with its oracle rendering.
+    */
+  private[queries] def armMean(x: String): Column =
+    col(s"sx_$x").cast(DoubleType) / col(s"n_$x").cast(DoubleType)
+  private[queries] def armSe(x: String): Column = {
+    val n = col(s"n_$x")
+    (n * col(s"sxx_$x") - col(s"sx_$x") * col(s"sx_$x")).cast(DoubleType) /
+      (n * (n - 1)).cast(DoubleType) / n.cast(DoubleType)
+  }
+  private[queries] def armSeSql(x: String): String =
+    s"(CAST(n_$x * sxx_$x - sx_$x * sx_$x AS DOUBLE) / CAST(n_$x * (n_$x - 1) AS DOUBLE) / CAST(n_$x AS DOUBLE))"
+
   val welchOracle: String = {
-    val vA = "(CAST(n_a * sxx_a - sx_a * sx_a AS DOUBLE) / CAST(n_a * (n_a - 1) AS DOUBLE) / CAST(n_a AS DOUBLE))"
-    val vB = "(CAST(n_b * sxx_b - sx_b * sx_b AS DOUBLE) / CAST(n_b * (n_b - 1) AS DOUBLE) / CAST(n_b AS DOUBLE))"
+    val vA = armSeSql("a")
+    val vB = armSeSql("b")
     s"""WITH ev AS (
        |  SELECT event_type AS t,
        |    CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS arm,

@@ -106,6 +106,23 @@ object StatTests {
       |    ELSE 'large' END AS magnitude
       |FROM f ORDER BY event_type""".stripMargin
 
+  /** (seg, cents): order value in integer cents by customer market segment. */
+  private def segCents(s: SparkSession, dir: String): DataFrame =
+    Tables.t(s, dir, "orders")
+      .join(Tables.t(s, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment")),
+        col("o_custkey") === col("c_custkey"))
+      .select(col("c_mktsegment").as("seg"),
+        round(col("o_totalprice") * 100).cast(LongType).as("cents"))
+
+  /** (seg, n, s = Σcents, q = Σcents²) over [[segCents]], sums in DECIMAL(38,0). */
+  private def segMoments(s: SparkSession, dir: String): DataFrame = {
+    val d0 = DecimalType(38, 0)
+    segCents(s, dir).groupBy(col("seg"))
+      .agg(count(lit(1)).as("n"), sum(col("cents").cast(d0)).as("s"),
+        sum((col("cents") * col("cents")).cast(d0)).as("q"))
+  }
+
   /** Brown–Forsythe variance-homogeneity test (Brown & Forsythe
     * 1974 — Levene's test with MEDIAN centers, the robust variant
     * every ANOVA pre-check uses): are order-value spreads equal
@@ -129,12 +146,7 @@ object StatTests {
     val d12 = DecimalType(38, 12)
     // pinned: ord feeds the median device's histogram AND
     // the deviation aggregate — one orders-customer join, not two
-    val ord = graft.plans.Checkpoint.pin(Tables.t(s, dir, "orders")
-      .join(Tables.t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        round(col("o_totalprice") * 100).cast(LongType).as("cents")))
+    val ord = graft.plans.Checkpoint.pin(segCents(s, dir))
     val med = Pctl.dist(ord, Seq("seg"), "cents", Seq("med" -> 0.5))
       .withColumn("m2", (col("med") * 2).cast(LongType))
     val dev = ord.join(broadcast(med), "seg")
@@ -907,17 +919,8 @@ object StatTests {
     * (segment) moment grid; all algebra after is 5-row.
     */
   def anovaF(s: SparkSession, dir: String): DataFrame = {
-    val d0 = DecimalType(38, 0)
     val d12 = DecimalType(38, 12)
-    val ord = Tables.t(s, dir, "orders")
-      .join(Tables.t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-    val g = ord.groupBy(col("seg"))
-      .agg(count(lit(1)).as("n"), sum(col("cents").cast(d0)).as("s"),
-        sum((col("cents") * col("cents")).cast(d0)).as("q"))
+    val g = segMoments(s, dir)
     val between = col("s").cast(DoubleType) * col("s").cast(DoubleType) /
       col("n").cast(DoubleType)
     val within = col("q").cast(DoubleType) - between
@@ -1076,17 +1079,8 @@ object StatTests {
     * both from one cached grid.
     */
   def tukeyHsd(s: SparkSession, dir: String): DataFrame = {
-    val d0 = DecimalType(38, 0)
     val d12 = DecimalType(38, 12)
-    val ord = Tables.t(s, dir, "orders")
-      .join(Tables.t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-    val g = ord.groupBy(col("seg"))
-      .agg(count(lit(1)).as("n"), sum(col("cents").cast(d0)).as("s"),
-        sum((col("cents") * col("cents")).cast(d0)).as("q"))
+    val g = segMoments(s, dir)
     val between = col("s").cast(DoubleType) * col("s").cast(DoubleType) /
       col("n").cast(DoubleType)
     val within = col("q").cast(DoubleType) - between
@@ -1458,12 +1452,7 @@ object StatTests {
     val d12 = DecimalType(38, 12)
     // pinned: ord feeds the grand-median histogram AND the
     // segment aggregate — one orders-customer join, not two
-    val ord = graft.plans.Checkpoint.pin(Tables.t(s, dir, "orders")
-      .join(Tables.t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        round(col("o_totalprice") * 100).cast(LongType).as("cents")))
+    val ord = graft.plans.Checkpoint.pin(segCents(s, dir))
     val med = Pctl.dist(ord, Nil, "cents", Seq("med" -> 0.5))
       .select((col("med") * 2).cast(LongType).as("m2"))
     // pinned: g feeds the per-segment output AND the tot
@@ -1562,17 +1551,8 @@ object StatTests {
     * segment grid; ln and the T/C algebra are grid-sized.
     */
   def bartlett(s: SparkSession, dir: String): DataFrame = {
-    val d0 = DecimalType(38, 0)
     val d12 = DecimalType(38, 12)
-    val ord = Tables.t(s, dir, "orders")
-      .join(Tables.t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-    val g = ord.groupBy(col("seg"))
-      .agg(count(lit(1)).as("n"), sum(col("cents").cast(d0)).as("s"),
-        sum((col("cents") * col("cents")).cast(d0)).as("q"))
+    val g = segMoments(s, dir)
       .filter(col("n") > 1)
     // per-group variance in cents² — one double crossing each
     val vi = (col("q").cast(DoubleType) -
@@ -2490,30 +2470,10 @@ object StatTests {
     * compares those identical doubles to literals.
     */
   def tostEquiv(s: SparkSession, dir: String): DataFrame = {
-    val d = DecimalType(38, 0)
     val deltaMicro = 50000.0
-    val grid = Tables.t(s, dir, "events")
-      .select(col("event_type").as("t"),
-        when(col("user_id") % 2 === 0, "A").otherwise("B").as("arm"),
-        round(col("value") * 1000000).cast(LongType).as("vm"))
-      .groupBy(col("t"), col("arm"))
-      .agg(count(lit(1)).as("n"), sum(col("vm").cast(d)).as("sx"),
-        sum((col("vm").cast(d) * col("vm"))).as("sxx"))
-    def pick(arm: String, f: String): Column =
-      sum(when(col("arm") === arm, col(f)))
-    val row = grid.groupBy(col("t"))
-      .agg(pick("A", "n").as("n_a"), pick("A", "sx").as("sx_a"),
-        pick("A", "sxx").as("sxx_a"),
-        pick("B", "n").as("n_b"), pick("B", "sx").as("sx_b"),
-        pick("B", "sxx").as("sxx_b"))
-    def va(n: String, sx: String, sxx: String): Column =
-      (col(n) * col(sxx) - col(sx) * col(sx)).cast(DoubleType) /
-        (col(n) * (col(n) - 1)).cast(DoubleType)
-    val seA = va("n_a", "sx_a", "sxx_a") / col("n_a").cast(DoubleType)
-    val seB = va("n_b", "sx_b", "sxx_b") / col("n_b").cast(DoubleType)
-    val se = sqrt(seA + seB)
-    val diff = col("sx_a").cast(DoubleType) / col("n_a").cast(DoubleType) -
-      col("sx_b").cast(DoubleType) / col("n_b").cast(DoubleType)
+    val row = StatOps.armMoments(s, dir)
+    val se = sqrt(StatOps.armSe("a") + StatOps.armSe("b"))
+    val diff = StatOps.armMean("a") - StatOps.armMean("b")
     val tLo = (diff + lit(deltaMicro)) / se
     val tHi = (diff - lit(deltaMicro)) / se
     row.select(col("t").as("event_type"),
@@ -2527,8 +2487,8 @@ object StatTests {
   }
 
   val tostEquivOracle: String = {
-    val vA = "(CAST(n_a * sxx_a - sx_a * sx_a AS DOUBLE) / CAST(n_a * (n_a - 1) AS DOUBLE) / CAST(n_a AS DOUBLE))"
-    val vB = "(CAST(n_b * sxx_b - sx_b * sx_b AS DOUBLE) / CAST(n_b * (n_b - 1) AS DOUBLE) / CAST(n_b AS DOUBLE))"
+    val vA = StatOps.armSeSql("a")
+    val vB = StatOps.armSeSql("b")
     val diff = "(CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE) - CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE))"
     val se = s"sqrt($vA + $vB)"
     s"""WITH ev AS (

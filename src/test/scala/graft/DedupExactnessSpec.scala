@@ -127,6 +127,11 @@ class DedupExactnessSpec extends SparkSpec {
       checkClusters(LlmDedup.starClusters(df), want)
       checkClusters(LlmDedup.propagateClusters(
         df.select(col("a").as("doc_a"), col("b").as("doc_b"))), want)
+      // a converged edge relation is a star forest, so starLabels'
+      // undeduplicated b-branch labels every doc exactly once
+      val ids = LlmDedup.starLabels(df).select(col("doc_id")).as[Long].collect().sorted.toSeq
+      assert(ids === want.values.flatten.toSeq.sorted,
+        s"seed $seed: starLabels must label each doc_id exactly once")
     }
   }
 

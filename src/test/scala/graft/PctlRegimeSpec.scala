@@ -39,18 +39,17 @@ class PctlRegimeSpec extends AnyFunSuite {
     // independent domains (dist bounded); tokenWeightedLen: weighted
     // length histogram, bounded domain (distHist bounded);
     // weightedQuantiles: quantity-weighted near-distinct cents
-    // (distHist sparse over a raw column-pruned scan); weightedPsi:
-    // rest token mass on the bounded length domain — grid algebra
-    // like psiDrift (distHist bounded)
+    // (distHist sparse over a raw column-pruned scan)
     "queries/QuantileOps.scala" -> Map("dist" -> 1, "dist bounded" -> 5,
-      "distHist" -> 1, "distHist bounded" -> 2),
+      "distHist" -> 1, "distHist bounded" -> 1),
     // quantileReservoir's exact leg: l_extendedprice — the canonical
     // near-distinct stress domain → sparse dist over a raw
     // column-pruned scan
     "queries/Sketches.scala" -> Map("dist" -> 1),
     // histogramEqui bounds: 2-dp event values (dist bounded);
-    // psiDrift fences: rest counts are grid algebra over the 2-dp
-    // bucket domain (distHist bounded); outlierBounds med + MAD: one
+    // psiVsRest fences (psiDrift's 2-dp buckets, weightedPsi's
+    // lengths): rest mass is grid algebra over the bounded bucket
+    // domain (distHist bounded); outlierBounds med + MAD: one
     // pinned (type, 2-dp value) histogram feeds both — weighted
     // medians on the bounded domain (distHist bounded ×2)
     "queries/DataOps.scala" -> Map("dist bounded" -> 1, "distHist bounded" -> 3),
