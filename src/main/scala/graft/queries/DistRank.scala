@@ -52,11 +52,11 @@ object DistRank {
 
   /** Exact floor-division of nonnegative Longs: (a − a mod d) divides
     * exactly, and exact-integer double division is correctly rounded to
-    * the exact integer quotient (the [[StatTests]] `r6posRat` device).
-    * Exact for a < 2^53 — every key domain on this surface (cents,
-    * micro-units, counts) is orders of magnitude below that.
+    * the exact integer quotient. Exact for a < 2^53 — every key domain
+    * on this surface (cents, micro-units, counts) is orders of magnitude
+    * below that. Shared with [[EdfOps]] and [[StatTests]]' `r6posRat`.
     */
-  private def idiv(a: Column, d: Column): Column =
+  private[queries] def idiv(a: Column, d: Column): Column =
     ((a - pmod(a, d)).cast(DoubleType) / d.cast(DoubleType)).cast(LongType)
 
   /** Monotone bucket id for `v` given the group's exact [lo, hi]. */

@@ -36,12 +36,7 @@ import org.apache.spark.sql.types._
   */
 object EdfOps {
 
-  /** Exact floor-division of nonnegative Longs ([[DistRank]]'s idiv
-    * device: the subtraction makes the division exact, and exact-integer
-    * double division is correctly rounded; exact for a < 2^53).
-    */
-  private def idiv(a: Column, d: Column): Column =
-    ((a - pmod(a, d)).cast(DoubleType) / d.cast(DoubleType)).cast(LongType)
+  import DistRank.idiv
 
   /** ceil(a/d) for positive Longs, via idiv(a + d − 1, d) — matches
     * DuckDB's `(a + d - 1) // d` on positive operands bit-for-bit.

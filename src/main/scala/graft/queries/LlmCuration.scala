@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -433,8 +433,6 @@ object LlmCuration {
       .select(col("lang"),
         log(col("rank").cast(DoubleType)).as("x"),
         log(col("cnt").cast(DoubleType)).as("y"))
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
     val m = xy.groupBy(col("lang")).agg(
       count(lit(1)).cast(DoubleType).as("n"),
       dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
@@ -491,8 +489,6 @@ object LlmCuration {
       .select(col("lang"),
         log(col("cum_tok").cast(DoubleType)).as("x"),
         log(col("cum_vocab").cast(DoubleType)).as("y"))
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
     val m = curve.groupBy(col("lang")).agg(
       count(lit(1)).cast(DoubleType).as("n"),
       dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
@@ -1094,6 +1090,13 @@ object LlmCuration {
       |FROM cnts GROUP BY 1 ORDER BY lang""".stripMargin
 
   private val DsirKeep = 5
+
+  /** Cross-row Σ under the float policy below (defense 1): each term
+    * is fixed up to DECIMAL(38,12) and summed exactly, so no summation
+    * order can move the total; one double crossing at the end.
+    */
+  private[queries] def dsum(c: Column): Column =
+    sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
 
   /** DSIR-style importance weights (Xie et al. 2023, arXiv:2302.03169
     * "Data Selection for Language Models via Importance Resampling"):

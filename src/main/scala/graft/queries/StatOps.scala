@@ -26,6 +26,8 @@ import org.apache.spark.sql.types._
   */
 object StatOps {
 
+  import LlmCuration.dsum
+
   /** Gini coefficient of customer order spend per market segment —
     * the revenue-concentration diagnostic (Gini 1912; the "how skewed
     * is my key distribution" number that decides whether a 100 TB
@@ -1148,7 +1150,6 @@ object StatOps {
       .select(col("p_brand").as("brand"),
         log(col("cents").cast(DoubleType)).as("x"),
         log(col("q_units").cast(DoubleType)).as("y"))
-    def dsum(c: Column) = sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
     val m = pts.groupBy(col("brand")).agg(
       count(lit(1)).cast(DoubleType).as("n"),
       dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
@@ -1315,7 +1316,6 @@ object StatOps {
     val xy = grid.select(col("cohort_week"),
       col("w").cast(DoubleType).as("x"),
       log(col("n_users").cast(DoubleType)).as("y"))
-    def dsum(c: Column) = sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
     val m = xy.groupBy(col("cohort_week")).agg(
       count(lit(1)).cast(DoubleType).as("n"),
       dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),

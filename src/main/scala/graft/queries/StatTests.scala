@@ -1251,11 +1251,9 @@ object StatTests {
     * each quotient is an integer well under 2⁵³.
     */
   private def r6posRat(num: Column, den: Column): Column = {
-    def idiv(a: Column, d: Column): Column =
-      ((a - pmod(a, d)).cast(DoubleType) / d.cast(DoubleType)).cast(LongType)
-    val qint = idiv(num, den)
+    val qint = DistRank.idiv(num, den)
     val rem = pmod(num, den)
-    val qf = idiv(rem * lit(2000000L) + den, den * lit(2L))
+    val qf = DistRank.idiv(rem * lit(2000000L) + den, den * lit(2L))
     (qint * lit(1000000L) + qf).cast(DoubleType) / lit(1000000.0)
   }
 

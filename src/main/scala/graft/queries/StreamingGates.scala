@@ -18,6 +18,8 @@ import org.apache.spark.sql.types._
   */
 object StreamingGates {
 
+  import LlmCuration.dsum
+
   /** 5-minute event-time tumbling buckets per event_type — the exact
     * grouping expression of EventsStream.windowedCounts.
     */
@@ -971,8 +973,6 @@ object StreamingGates {
           col("l_hour") === col("hour") - expr(s"INTERVAL $k HOURS"))
         .select(col("event_type"), lit(k).as("lag"), col("bar").as("x"), col("y"))
     }.reduce(_ unionByName _)
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
     val m = pairs.groupBy(col("event_type"), col("lag")).agg(
       count(lit(1)).cast(DoubleType).as("n"),
       dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
@@ -1235,8 +1235,6 @@ object StreamingGates {
           col("l_hour") <= col("hour") + expr(s"INTERVAL $CorrMaxLag HOURS"))
       .select(col("event_type"), lag.as("lag"), col("bar").as("x"), col("y"))
       .filter(col("lag") >= 2)
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(38, 12))).cast(DoubleType)
     val m = pairs.groupBy(col("event_type"), col("lag")).agg(
       count(lit(1)).cast(DoubleType).as("n"),
       dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),

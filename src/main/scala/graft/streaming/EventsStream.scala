@@ -1,27 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 
-/** Stateful streaming over an event feed — the capabilities a
-  * training-data/analytics pipeline needs beyond the reference's
-  * stateless MV (SURVEY §2.8 maps the reference; these are the
-  * engine-level extensions: event-time windows with watermarks, and
-  * custom session state via flatMapGroupsWithState).
-  *
-  * Scale notes:
-  *  - the windowed aggregate is a streaming partial→final hash agg keyed
-  *    by (window, event_type): state size is O(open windows × types),
-  *    bounded by the watermark, and shuffles only group deltas;
-  *  - sessionization state is per-user and evicted by event-time
-  *    timeout, so state growth is O(active users in gap window), not
-  *    O(stream length);
-  *  - both run identically under Trigger.AvailableNow (batch-equivalent
-  *    catch-up) and a continuous trigger.
-  */
 /** Open-session accumulator for [[EventsStream.sessionize]] — top-level
   * (not nested/private) so the state encoder's generated code links.
   */
@@ -77,9 +61,10 @@ final case class PhBuf(openHourMs: Long, openSum: String, openN: Long,
 final case class FunnelBuf(views: List[Long], clicks: List[Long],
     purchases: List[Long], last: Long) {
 
-  /** Watermark-driven compaction (ADVICE r5): the raw buffers grow with
-    * every step event, so a continuously-active user (bot / hot key)
-    * would accumulate state for the episode's whole lifetime.
+  /** Watermark-driven compaction, so that state stays bounded for a
+    * continuously-active user (bot / hot key): the raw buffers grow with
+    * every step event and would otherwise hold the episode's whole
+    * lifetime.
     * Everything droppable under the re-qualification semantics is
     * dropped; the result is exact w.r.t. [[EventsStream.funnel]]'s
     * `close` (property-tested in EventsStreamSpec):
@@ -104,9 +89,6 @@ final case class FunnelBuf(views: List[Long], clicks: List[Long],
     * `residualCap` SMALLEST values — the min-semantics candidates. The
     * cap only truncates a key holding >4096 undecided in-horizon steps
     * (a bot by construction); state stays bounded either way.
-    *
-    * Lives on the state case class (not the [[EventsStream]] module) so
-    * the stateful closure stays serializable.
     */
   def compacted(watermarkMs: Long): FunnelBuf = {
     val residualCap = 4096
@@ -157,7 +139,55 @@ final case class HllStreamState(regs: Seq[Long])
 
 final case class HllUserEstimate(event_type: String, v_zero: Int, n_est: Double)
 
-object EventsStream {
+/** Stateful streaming over an event feed — the capabilities a
+  * training-data/analytics pipeline needs beyond the reference's
+  * stateless MV (SURVEY §2.8 maps the reference; these are the
+  * engine-level extensions: event-time windows with watermarks, and
+  * custom per-key state).
+  *
+  * Scale notes:
+  *  - the windowed aggregate is a streaming partial→final hash agg keyed
+  *    by (window, event_type): state size is O(open windows × types),
+  *    bounded by the watermark, and shuffles only group deltas;
+  *  - sessionization state is per-user and evicted by event-time
+  *    timeout, so state growth is O(active users in gap window), not
+  *    O(stream length);
+  *  - both run identically under Trigger.AvailableNow (batch-equivalent
+  *    catch-up) and a continuous trigger.
+  *
+  * ==The keyed event-time fold==
+  * Every per-key operator with custom state (transitions, TWAP,
+  * attribution, rolling p95, Page–Hinkley, EWMA, sessions, funnel and
+  * the KMV/theta/HLL sketches) is a `step` and an `expire` on one
+  * shared fold, `keyedFold`, which owns the state lifecycle:
+  *  - key: rows are watermarked on `ts` by `Lateness` (every
+  *    watermark in this file uses it) and grouped by the operator's
+  *    key — user, event type, or set;
+  *  - ordering: a micro-batch's rows arrive unordered; operators that
+  *    fold in order sort them by (ts, event_id) (`inOrder`), the
+  *    batch twins' order, so replay is deterministic;
+  *  - stragglers: an event behind what the state has already folded
+  *    (at or before its newest (ts, event_id) point, `newer`; or in
+  *    a day or hour already closed) is dropped, never retro-inserted —
+  *    every output is append-only, so a late event cannot invalidate
+  *    a row already emitted;
+  *  - timeout: `step` returns the next state with its deadline, and the
+  *    timeout is armed at max(deadline, watermark + 1). The clamp is
+  *    needed because the engine rejects a timeout at or before the
+  *    current watermark (and fails the query), which a straggler inside
+  *    the lateness bound would otherwise compute. No next state removes
+  *    the key's state;
+  *  - expiry: `expire` runs once the watermark passes the deadline.
+  *    The per-key emitters close the key's open episode and REMOVE the
+  *    state; the sketches emit their estimate-so-far and KEEP the state
+  *    without re-arming (cardinality is monotone), so a quiet key emits
+  *    once and a later burst re-arms it through `step`.
+  *
+  * The module is Serializable because the operators' closures call its
+  * exact helpers, which ties them to the module instance (it
+  * serializes as a proxy that resolves to the executor's singleton).
+  */
+object EventsStream extends Serializable {
 
   val eventSchema: StructType = StructType(Seq(
     StructField("user_id", LongType),
@@ -188,6 +218,87 @@ object EventsStream {
       .as[Event]
   }
 
+  /** The lateness bound of every watermark here: an event more than
+    * this behind the newest event time seen is late.
+    */
+  private val Lateness = "10 minutes"
+
+  // Exact scalar helpers: the batch twins' HALF_UP decimal roundings
+  // and µs timestamps, replayed on the JVM for bit-parity
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def dec12(x: Double): BigDecimal =
+    BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
+  private def micro(v: Double): Long =
+    BigDecimal(v * 1000000.0).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  private def us(t: Timestamp): Long =
+    t.toInstant.getEpochSecond * 1000000L + t.getNanos / 1000L
+
+  /** A micro-batch's rows in (ts, event_id) order, ts read at the
+    * resolution the operator compares event times in (ms unless given).
+    */
+  private def inOrder(rows: Iterator[Event],
+      time: Timestamp => Long = _.getTime): Seq[Event] =
+    rows.toSeq.sortBy(e => (time(e.ts), e.event_id))
+
+  /** The straggler test: is (t, id) strictly after the state's newest
+    * point (lastT, lastId)?
+    */
+  private def newer(t: Long, id: Long, lastT: Long, lastId: Long): Boolean =
+    t > lastT || (t == lastT && id > lastId)
+
+  /** The keyed event-time fold (contract in the object scaladoc):
+    * `step(key, state, rows, watermarkMs)` returns the next state with
+    * its timeout deadline (None removes the state) and the rows to
+    * emit; `expire(key, state)` returns the state to keep (None
+    * removes it) and the rows to emit.
+    */
+  private def keyedFold[T, K: Encoder, S: Encoder, O: Encoder](in: Dataset[T])(key: T => K)(
+      step: (K, Option[S], Iterator[T], Long) => (Option[(S, Long)], Seq[O]))(
+      expire: (K, S) => (Option[S], Seq[O])): Dataset[O] = {
+    def fn(k: K, rows: Iterator[T], state: GroupState[S]): Iterator[O] =
+      if (state.hasTimedOut) {
+        val (kept, out) = expire(k, state.get)
+        kept match {
+          case Some(s) => state.update(s) // kept, not re-armed
+          case None => state.remove()
+        }
+        out.iterator
+      } else {
+        val wm = state.getCurrentWatermarkMs()
+        val (next, out) = step(k, state.getOption, rows, wm)
+        next match {
+          case Some((s, deadline)) =>
+            state.update(s)
+            state.setTimeoutTimestamp(math.max(deadline, wm + 1))
+          case None => if (state.exists) state.remove()
+        }
+        out.iterator
+      }
+    in.withWatermark("ts", Lateness)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+  }
+
+  /** The sketches' salted 60-bit user hash: the same engine-reproducible
+    * [[graft.queries.Sketches.h60]] expression in the streams and their
+    * batch twins, so parity is a column-for-column replay.
+    */
+  private def userHash(salt: String): Column =
+    graft.queries.Sketches.h60(concat_ws(":", col("user_id"), lit(salt)))
+
+  /** `(event_type, h, ts)` rows for a streaming sketch: the hash is a
+    * column computed before the typed state op, so the state code only
+    * maintains longs.
+    */
+  private def userHashes(events: Dataset[Event],
+      salt: String): Dataset[(String, Long, Timestamp)] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("event_type"), userHash(salt).as("h"), col("ts"))
+      .as[(String, Long, Timestamp)]
+  }
+
   /** Event-time tumbling-window aggregate with a watermark: 5-minute
     * windows per event_type, 10-minute lateness bound. Append mode —
     * a window row is emitted exactly once, when the watermark passes
@@ -195,7 +306,7 @@ object EventsStream {
     */
   def windowedCounts(events: Dataset[Event]): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", Lateness)
       .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
       .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
@@ -213,7 +324,7 @@ object EventsStream {
     */
   def ohlcBars(events: Dataset[Event]): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", Lateness)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
         min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
@@ -238,7 +349,7 @@ object EventsStream {
     */
   def sessionWindowCounts(events: Dataset[Event]): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", Lateness)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
       .select(col("user_id"), col("sw.start").as("session_start"),
@@ -263,7 +374,7 @@ object EventsStream {
     */
   def enrichedWindowedValue(events: Dataset[Event], dim: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", Lateness)
       .join(broadcast(dim), "event_type")
       .groupBy(window(col("ts"), "5 minutes").as("w"), col("category"))
       .agg(count(lit(1)).as("n_events"),
@@ -280,51 +391,26 @@ object EventsStream {
     * (the last seen event), evicted [[horizonMinutes]] after the last
     * event. Downstream, the same groupBy that the batch gate runs
     * turns pairs into the transition matrix.
-    *
-    * Ordering policy (tested): rows are merged in (ts, event_id) order
-    * within a micro-batch; a cross-batch straggler OLDER than the
-    * state's last event is DROPPED, not retro-inserted — the emitted
-    * pair stream is append-only, so a late event cannot invalidate a
-    * transition already emitted.
+    * Ordering and stragglers follow the keyed fold's policy (object
+    * scaladoc).
     */
   def transitionPairs(events: Dataset[Event],
       horizonMinutes: Int = 1440): Dataset[TransPair] = {
     val spark = events.sparkSession
     import spark.implicits._
-
-    def fn(userId: Long, rows: Iterator[Event],
-        state: GroupState[TransState]): Iterator[TransPair] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        val out = Seq.newBuilder[TransPair]
-        var last = state.getOption
-        sorted.foreach { e =>
-          val t = e.ts.getTime
-          last match {
-            case Some(s) if t > s.lastTs || (t == s.lastTs && e.event_id > s.lastId) =>
-              out += TransPair(userId, s.lastType, e.event_type, e.ts)
-              last = Some(TransState(t, e.event_id, e.event_type))
-            case Some(_) => () // out-of-order straggler: dropped by policy
-            case None =>
-              last = Some(TransState(t, e.event_id, e.event_type))
-          }
+    keyedFold(events)(_.user_id) { (userId, st: Option[TransState], rows, _) =>
+      var last = st
+      val out = inOrder(rows).flatMap { e =>
+        last match {
+          case Some(s) if !newer(e.ts.getTime, e.event_id, s.lastTs, s.lastId) =>
+            None // straggler: dropped by policy
+          case prev =>
+            last = Some(TransState(e.ts.getTime, e.event_id, e.event_type))
+            prev.map(s => TransPair(userId, s.lastType, e.event_type, e.ts))
         }
-        last.foreach { s =>
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(s.lastTs + horizonMinutes * 60000L,
-            state.getCurrentWatermarkMs + 1))
-        }
-        out.result().iterator
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      (last.map(s => s -> (s.lastTs + horizonMinutes * 60000L)), out)
+    } { (_, _) => (None, Nil) }
   }
 
   final case class TwapRow(user_id: Long, day: java.time.LocalDate,
@@ -340,19 +426,14 @@ object EventsStream {
     * (the batch DECIMAL(38,0) column), one double division, HALF_UP
     * round-6 — so an `AvailableNow` replay emits rows bit-equal to the
     * batch aggregate for every closed day (EventsStreamSpec parity).
-    * Same straggler policy as [[ewma]]: an event at or before the
-    * buffered last point (or on an already-closed day) is dropped.
     */
   def twapDaily(events: Dataset[Event], graceMinutes: Int = 60): Dataset[TwapRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     val DayMs = 86400000L
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    def micro(v: Double): Long =
-      BigDecimal(v * 1000000.0).setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
-    def us(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.getNanos / 1000L
+    def closesAt(dayMs: Long): Long = dayMs + DayMs + graceMinutes * 60000L
+    def open(dayMs: Long, u: Long, e: Event): TwapBuf =
+      TwapBuf(dayMs, u, e.event_id, micro(e.value), "0", 0L, 0L)
     def close(userId: Long, b: TwapBuf): Option[TwapRow] =
       if (b.spanUs > 0)
         // LocalDate.ofEpochDay is timezone-independent: java.sql.Date
@@ -364,62 +445,34 @@ object EventsStream {
           round6(BigInt(b.wsum).toDouble / b.spanUs.toDouble / 1000000.0)))
       else None
 
-    def fn(userId: Long, rows: Iterator[Event],
-        state: GroupState[TwapBuf]): Iterator[TwapRow] = {
-      if (state.hasTimedOut) {
-        val out = state.getOption.flatMap(close(userId, _))
-        state.remove()
-        out.iterator
-      } else {
-        val sorted = rows.toSeq.sortBy(e => (us(e.ts), e.event_id))
-        var buf = state.getOption.orNull
-        val out = Seq.newBuilder[TwapRow]
-        // A day whose close threshold (day end + grace) is at or before
-        // the current watermark may ALREADY have been emitted by a
-        // timeout that then removed the state — opening a fresh buffer
-        // for it would emit a second partial row for the same
-        // (user_id, day). Such sub-watermark stragglers are dropped, so
-        // a closed day can never be reopened.
-        val wm = state.getCurrentWatermarkMs
-        def closable(dayMs: Long): Boolean =
-          dayMs + DayMs + graceMinutes * 60000L <= wm
-        sorted.foreach { e =>
-          val d = Math.floorDiv(e.ts.getTime, DayMs) * DayMs
-          val u = us(e.ts)
-          if (buf == null) {
-            if (!closable(d))
-              buf = TwapBuf(d, u, e.event_id, micro(e.value), "0", 0L, 0L)
-          } else if (d > buf.dayMs) {
-            close(userId, buf).foreach(out += _)
-            buf = if (closable(d)) null
-            else TwapBuf(d, u, e.event_id, micro(e.value), "0", 0L, 0L)
-          } else if (d == buf.dayMs &&
-              (u > buf.lastUs || (u == buf.lastUs && e.event_id > buf.lastId))) {
-            val dur = u - buf.lastUs
-            buf = TwapBuf(d, u, e.event_id, micro(e.value),
-              (BigInt(buf.wsum) + BigInt(buf.lastVm) * BigInt(dur)).toString,
-              buf.spanUs + dur, buf.nIntervals + 1)
-          } // closed-day or out-of-order straggler: dropped by policy
-        }
-        if (buf != null) {
-          state.update(buf)
-          state.setTimeoutTimestamp(math.max(
-            buf.dayMs + DayMs + graceMinutes * 60000L,
-            state.getCurrentWatermarkMs + 1))
-        } else if (state.exists) {
-          // The held day was closed inline and its successor dropped as
-          // sub-watermark: clear the state or the pending timeout would
-          // emit the already-closed day a second time.
-          state.remove()
-        }
-        out.result().iterator
+    keyedFold(events)(_.user_id) { (userId, st: Option[TwapBuf], rows, wm) =>
+      var buf = st.orNull
+      val out = Seq.newBuilder[TwapRow]
+      // A day that closes at or before the current watermark may ALREADY
+      // have been emitted by a timeout that then removed the state —
+      // opening a fresh buffer for it would emit a second partial row
+      // for the same (user_id, day). Such sub-watermark stragglers are
+      // dropped, so a closed day can never be reopened.
+      inOrder(rows, us).foreach { e =>
+        val d = Math.floorDiv(e.ts.getTime, DayMs) * DayMs
+        val u = us(e.ts)
+        if (buf == null) {
+          if (closesAt(d) > wm) buf = open(d, u, e)
+        } else if (d > buf.dayMs) {
+          out ++= close(userId, buf)
+          buf = if (closesAt(d) <= wm) null else open(d, u, e)
+        } else if (d == buf.dayMs && newer(u, e.event_id, buf.lastUs, buf.lastId)) {
+          val dur = u - buf.lastUs
+          buf = TwapBuf(d, u, e.event_id, micro(e.value),
+            (BigInt(buf.wsum) + BigInt(buf.lastVm) * BigInt(dur)).toString,
+            buf.spanUs + dur, buf.nIntervals + 1)
+        } // closed-day or out-of-order straggler: dropped by policy
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      // None when the held day closed inline and its successor was
+      // dropped: the state goes, or its pending timeout would emit the
+      // closed day a second time
+      (Option(buf).map(b => b -> closesAt(b.dayMs)), out.result())
+    } { (userId, b) => (None, close(userId, b).toSeq) }
   }
 
   final case class TouchRow(user_id: Long, purchase_id: Long, view_id: Long,
@@ -433,19 +486,15 @@ object EventsStream {
     * exactly (same integer ratios, same HALF_UP round-6), and
     * same-timestamp views sort BEFORE purchases (the batch join's
     * inclusive view_ts ≤ purchase_ts), so an `AvailableNow` replay is
-    * bit-equal to the batch gate (EventsStreamSpec parity). Straggler
-    * policy as [[ewma]]: an event at or before the buffer's newest
-    * point is dropped.
+    * bit-equal to the batch gate (EventsStreamSpec parity). An event
+    * older than the buffer's newest point is dropped; one at the same
+    * µs is kept, since a purchase may share its views' timestamp.
     */
   def attribPosition(events: Dataset[Event],
       windowMinutes: Int = 30, graceMinutes: Int = 60): Dataset[TouchRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     val WindowUs = windowMinutes * 60000000L
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    def us(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.getNanos / 1000L
     def credit(pos: Int, k: Int): Double = {
       val (cn, cd) =
         if (k == 1) (1L, 1L)
@@ -454,51 +503,39 @@ object EventsStream {
       round6(cn.toDouble / cd.toDouble)
     }
 
-    def fn(userId: Long, rows: Iterator[Event],
-        state: GroupState[AttribBuf]): Iterator[TouchRow] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        // same-ts views order before purchases: the batch join is
-        // inclusive on view_ts <= purchase_ts
-        val sorted = rows.toSeq.sortBy(e =>
-          (us(e.ts), if (e.event_type == "purchase") 1 else 0, e.event_id))
-        var buf = state.getOption.getOrElse(AttribBuf(Nil, Nil, Long.MinValue))
-        val out = Seq.newBuilder[TouchRow]
-        sorted.foreach { e =>
-          val u = us(e.ts)
-          if (u >= buf.lastUs || buf.lastUs == Long.MinValue) {
-            val keep = buf.viewUs.zip(buf.viewIds).filter(_._1 >= u - WindowUs)
-            buf = AttribBuf(keep.map(_._2), keep.map(_._1), math.max(u, buf.lastUs))
-            e.event_type match {
-              case "view" =>
-                buf = AttribBuf(buf.viewIds :+ e.event_id,
-                  buf.viewUs :+ u, buf.lastUs)
-              case "purchase" =>
-                val touches = buf.viewUs.zip(buf.viewIds)
-                  .filter(t => t._1 >= u - WindowUs && t._1 <= u)
-                  .sortBy(identity)
-                val k = touches.length
-                touches.zipWithIndex.foreach { case ((_, vid), i) =>
-                  out += TouchRow(userId, e.event_id, vid, i + 1, k.toLong,
-                    credit(i + 1, k))
-                }
-              case _ => ()
-            }
-          } // sub-buffer straggler: dropped by policy
-        }
-        state.update(buf)
-        state.setTimeoutTimestamp(math.max(
-          buf.lastUs / 1000L + (windowMinutes + graceMinutes) * 60000L,
-          state.getCurrentWatermarkMs + 1))
-        out.result().iterator
+    val touchEvents = events.filter(e => e.event_type == "view" || e.event_type == "purchase")
+    keyedFold(touchEvents)(_.user_id) { (userId, st: Option[AttribBuf], rows, _) =>
+      // same-ts views order before purchases: the batch join is
+      // inclusive on view_ts <= purchase_ts
+      val sorted = rows.toSeq.sortBy(e =>
+        (us(e.ts), if (e.event_type == "purchase") 1 else 0, e.event_id))
+      var buf = st.getOrElse(AttribBuf(Nil, Nil, Long.MinValue))
+      val out = Seq.newBuilder[TouchRow]
+      sorted.foreach { e =>
+        val u = us(e.ts)
+        if (u >= buf.lastUs || buf.lastUs == Long.MinValue) {
+          val keep = buf.viewUs.zip(buf.viewIds).filter(_._1 >= u - WindowUs)
+          buf = AttribBuf(keep.map(_._2), keep.map(_._1), math.max(u, buf.lastUs))
+          e.event_type match {
+            case "view" =>
+              buf = AttribBuf(buf.viewIds :+ e.event_id,
+                buf.viewUs :+ u, buf.lastUs)
+            case "purchase" =>
+              val touches = buf.viewUs.zip(buf.viewIds)
+                .filter(t => t._1 >= u - WindowUs && t._1 <= u)
+                .sortBy(identity)
+              val k = touches.length
+              touches.zipWithIndex.foreach { case ((_, vid), i) =>
+                out += TouchRow(userId, e.event_id, vid, i + 1, k.toLong,
+                  credit(i + 1, k))
+              }
+            case _ => ()
+          }
+        } // sub-buffer straggler: dropped by policy
       }
-    }
-
-    events
-      .filter(e => e.event_type == "view" || e.event_type == "purchase")
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      (Some(buf -> (buf.lastUs / 1000L + (windowMinutes + graceMinutes) * 60000L)),
+        out.result())
+    } { (_, _) => (None, Nil) }
   }
 
   final case class RollRow(event_type: String, hour: Timestamp, bar: Double,
@@ -516,7 +553,7 @@ object EventsStream {
     * (2v+100) DIV 200 HALF_UP round) for the percentile — so an `AvailableNow`
     * replay emits rows bit-equal to the batch gate for every closed
     * hour (EventsStreamSpec parity). Stragglers into closed hours are
-    * dropped ([[ewma]]'s policy).
+    * dropped.
     */
   def rollingP95(events: Dataset[Event], windowHours: Int = 24,
       graceMinutes: Int = 60): Dataset[RollRow] = {
@@ -524,14 +561,10 @@ object EventsStream {
     import spark.implicits._
     val HourMs = 3600000L
     val WindowMs = windowHours * HourMs
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    def dec12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, scala.math.BigDecimal.RoundingMode.HALF_UP)
-    // the batch gate's exact integer interpolation (round-13 rewrite):
-    // bars are exact 6-dp values → micro BIGINTs, pos scaled to
-    // hundredths, (2v + 100) DIV 200 HALF_UP — bit-parity by identical
-    // arithmetic, not by matching double ulps
+    // the batch gate's exact integer interpolation: bars are exact 6-dp
+    // values → micro BIGINTs, pos scaled to hundredths, (2v + 100) DIV
+    // 200 HALF_UP — bit-parity by identical integer arithmetic, which
+    // a double interpolation could only match to the last ulp
     def p95(sortedBars: IndexedSeq[Double]): Double = {
       val m = sortedBars.map(b => math.round(b * 1000000))
       val n = m.length
@@ -556,45 +589,27 @@ object EventsStream {
       }
     }
 
-    def fn(typ: String, rows: Iterator[Event],
-        state: GroupState[RollBuf]): Iterator[RollRow] = {
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(closeHour(typ, _)).flatMap(_._2)
-        state.remove()
-        out.iterator
-      } else {
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        var buf = state.getOption.orNull
-        val out = Seq.newBuilder[RollRow]
-        sorted.foreach { e =>
-          val h = Math.floorDiv(e.ts.getTime, HourMs) * HourMs
-          if (buf == null)
-            buf = RollBuf(h, dec12(e.value).toString, 1L, Nil, Nil)
-          else if (h > buf.openHourMs) {
-            val (nb, row) = closeHour(typ, buf)
-            row.foreach(out += _)
-            buf = RollBuf(h, dec12(e.value).toString, 1L,
-              nb.barHourMs, nb.barVals)
-          } else if (h == buf.openHourMs) {
-            buf = buf.copy(
-              openSum = (BigDecimal(buf.openSum) + dec12(e.value)).toString,
-              openN = buf.openN + 1)
-          } // straggler into a closed hour: dropped by policy
-        }
-        if (buf != null) {
-          state.update(buf)
-          state.setTimeoutTimestamp(math.max(
-            buf.openHourMs + HourMs + graceMinutes * 60000L,
-            state.getCurrentWatermarkMs + 1))
-        }
-        out.result().iterator
+    keyedFold(events)(_.event_type) { (typ, st: Option[RollBuf], rows, _) =>
+      var buf = st.orNull
+      val out = Seq.newBuilder[RollRow]
+      inOrder(rows).foreach { e =>
+        val h = Math.floorDiv(e.ts.getTime, HourMs) * HourMs
+        if (buf == null)
+          buf = RollBuf(h, dec12(e.value).toString, 1L, Nil, Nil)
+        else if (h > buf.openHourMs) {
+          val (nb, row) = closeHour(typ, buf)
+          out ++= row
+          buf = RollBuf(h, dec12(e.value).toString, 1L,
+            nb.barHourMs, nb.barVals)
+        } else if (h == buf.openHourMs) {
+          buf = buf.copy(
+            openSum = (BigDecimal(buf.openSum) + dec12(e.value)).toString,
+            openN = buf.openN + 1)
+        } // straggler into a closed hour: dropped by policy
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      (Option(buf).map(b => b -> (b.openHourMs + HourMs + graceMinutes * 60000L)),
+        out.result())
+    } { (typ, b) => (None, closeHour(typ, b)._2.toSeq) }
   }
 
   final case class PhRow(event_type: String, hour: Timestamp, bar: Double,
@@ -621,10 +636,6 @@ object EventsStream {
     val spark = events.sparkSession
     import spark.implicits._
     val HourMs = 3600000L
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    def dec12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, scala.math.BigDecimal.RoundingMode.HALF_UP)
 
     def closeHour(typ: String, b: PhBuf): (PhBuf, Option[PhRow]) = {
       if (b.openN == 0) (b, None)
@@ -645,45 +656,27 @@ object EventsStream {
       }
     }
 
-    def fn(typ: String, rows: Iterator[Event],
-        state: GroupState[PhBuf]): Iterator[PhRow] = {
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(closeHour(typ, _)).flatMap(_._2)
-        state.remove()
-        out.iterator
-      } else {
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        var buf = state.getOption.orNull
-        val out = Seq.newBuilder[PhRow]
-        sorted.foreach { e =>
-          val h = Math.floorDiv(e.ts.getTime, HourMs) * HourMs
-          if (buf == null)
-            buf = PhBuf(h, dec12(e.value).toString, 1L, 0L, 0L, "0", "0")
-          else if (h > buf.openHourMs) {
-            val (nb, row) = closeHour(typ, buf)
-            row.foreach(out += _)
-            buf = nb.copy(openHourMs = h, openSum = dec12(e.value).toString,
-              openN = 1L)
-          } else if (h == buf.openHourMs) {
-            buf = buf.copy(
-              openSum = (BigDecimal(buf.openSum) + dec12(e.value)).toString,
-              openN = buf.openN + 1)
-          } // straggler into a closed hour: dropped by policy
-        }
-        if (buf != null) {
-          state.update(buf)
-          state.setTimeoutTimestamp(math.max(
-            buf.openHourMs + HourMs + graceMinutes * 60000L,
-            state.getCurrentWatermarkMs + 1))
-        }
-        out.result().iterator
+    keyedFold(events)(_.event_type) { (typ, st: Option[PhBuf], rows, _) =>
+      var buf = st.orNull
+      val out = Seq.newBuilder[PhRow]
+      inOrder(rows).foreach { e =>
+        val h = Math.floorDiv(e.ts.getTime, HourMs) * HourMs
+        if (buf == null)
+          buf = PhBuf(h, dec12(e.value).toString, 1L, 0L, 0L, "0", "0")
+        else if (h > buf.openHourMs) {
+          val (nb, row) = closeHour(typ, buf)
+          out ++= row
+          buf = nb.copy(openHourMs = h, openSum = dec12(e.value).toString,
+            openN = 1L)
+        } else if (h == buf.openHourMs) {
+          buf = buf.copy(
+            openSum = (BigDecimal(buf.openSum) + dec12(e.value)).toString,
+            openN = buf.openN + 1)
+        } // straggler into a closed hour: dropped by policy
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      (Option(buf).map(b => b -> (b.openHourMs + HourMs + graceMinutes * 60000L)),
+        out.result())
+    } { (typ, b) => (None, closeHour(typ, b)._2.toSeq) }
   }
 
   final case class EwmaPoint(user_id: Long, ts: Timestamp, event_id: Long,
@@ -696,73 +689,47 @@ object EventsStream {
     * arithmetic REPLAYS the batch expression exactly (same integer
     * weights, same k-ascending double summation order, same HALF_UP
     * rounding), so under `AvailableNow` replay the emitted points are
-    * bit-equal to the batch projection (EventsStreamSpec parity).
-    * Same straggler policy as [[transitionPairs]]: an event at or
-    * before the buffer's newest point is dropped — at a live source
-    * the smoothed sequence is arrival-order within the policy, the
-    * documented cross-batch caveat.
+    * bit-equal to the batch projection (EventsStreamSpec parity). At
+    * a live source the smoothed sequence is arrival-order across
+    * batches, since the fold drops stragglers.
     */
   def ewma(events: Dataset[Event], horizonMinutes: Int = 1440): Dataset[EwmaPoint] = {
     val spark = events.sparkSession
     import spark.implicits._
     val weights = graft.queries.StreamingGates.EwmaWeights
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
 
-    def fn(userId: Long, rows: Iterator[Event],
-        state: GroupState[EwmaBuf]): Iterator[EwmaPoint] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        var buf = state.getOption.getOrElse(EwmaBuf(Nil, Nil, Nil))
-        val out = Seq.newBuilder[EwmaPoint]
-        sorted.foreach { e =>
-          val t = e.ts.getTime
-          val inOrder = buf.ts.isEmpty || t > buf.ts.last ||
-            (t == buf.ts.last && e.event_id > buf.ids.last)
-          if (inOrder) {
-            buf = EwmaBuf((buf.ts :+ t).takeRight(weights.length),
-              (buf.ids :+ e.event_id).takeRight(weights.length),
-              (buf.vs :+ e.value).takeRight(weights.length))
-            // mirror the batch column's summation: k = 0 (current)
-            // ascending, zero contribution where no lag exists
-            var num = 0.0
-            var den = 0.0
-            val n = buf.vs.length
-            for (k <- weights.indices) {
-              if (k < n) {
-                num += buf.vs(n - 1 - k) * weights(k).toDouble
-                den += weights(k).toDouble
-              } else {
-                num += 0.0
-                den += 0.0
-              }
+    keyedFold(events)(_.user_id) { (userId, st: Option[EwmaBuf], rows, _) =>
+      var buf = st.getOrElse(EwmaBuf(Nil, Nil, Nil))
+      val out = inOrder(rows).flatMap { e =>
+        val t = e.ts.getTime
+        if (buf.ts.isEmpty || newer(t, e.event_id, buf.ts.last, buf.ids.last)) {
+          buf = EwmaBuf((buf.ts :+ t).takeRight(weights.length),
+            (buf.ids :+ e.event_id).takeRight(weights.length),
+            (buf.vs :+ e.value).takeRight(weights.length))
+          // mirror the batch column's summation: k = 0 (current)
+          // ascending, zero contribution where no lag exists
+          var num = 0.0
+          var den = 0.0
+          val n = buf.vs.length
+          for (k <- weights.indices) {
+            if (k < n) {
+              num += buf.vs(n - 1 - k) * weights(k).toDouble
+              den += weights(k).toDouble
+            } else {
+              num += 0.0
+              den += 0.0
             }
-            out += EwmaPoint(userId, e.ts, e.event_id,
-              round6(e.value), round6(num / den))
-          } // out-of-order straggler: dropped by policy
-        }
-        if (buf.ts.nonEmpty) {
-          state.update(buf)
-          state.setTimeoutTimestamp(math.max(buf.ts.last + horizonMinutes * 60000L,
-            state.getCurrentWatermarkMs + 1))
-        }
-        out.result().iterator
+          }
+          Some(EwmaPoint(userId, e.ts, e.event_id, round6(e.value), round6(num / den)))
+        } else None // out-of-order straggler: dropped by policy
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      (Option.when(buf.ts.nonEmpty)(buf -> (buf.ts.last + horizonMinutes * 60000L)), out)
+    } { (_, _) => (None, Nil) }
   }
 
   /** Custom session state: per-user sessions closed by a 30-minute
-    * event-time gap. flatMapGroupsWithState with EventTimeTimeout —
-    * state evicts itself when the watermark passes last-event + gap,
-    * emitting the closed session.
+    * event-time gap. State expires when the watermark passes
+    * last-event + gap, emitting the closed session.
     *
     * `gapMinutes` must be >= the watermark delay: an event later than
     * the gap but inside the watermark would otherwise merge into a
@@ -772,53 +739,29 @@ object EventsStream {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60L * 1000L
+    def summary(userId: Long, s: SessionState): SessionSummary =
+      SessionSummary(userId, new Timestamp(s.start), new Timestamp(s.end), s.n, s.total)
 
-    def fn(userId: Long, rows: Iterator[Event],
-        state: GroupState[SessionState]): Iterator[SessionSummary] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator.single(SessionSummary(userId, new Timestamp(s.start),
-          new Timestamp(s.end), s.n, s.total))
-      } else {
-        // fold the micro-batch's rows into sessions, emitting any that a
-        // gap closes inside the batch; keep the trailing one in state
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        var cur = state.getOption
-        val closed = Seq.newBuilder[SessionSummary]
-        sorted.foreach { e =>
-          val t = e.ts.getTime
-          cur match {
-            case Some(s) if t - s.end <= gapMs =>
-              // min() start: a late in-watermark event can precede the
-              // session's current start when batches arrive out of order
-              cur = Some(SessionState(math.min(s.start, t), math.max(s.end, t),
-                s.n + 1, s.total + e.value))
-            case Some(s) =>
-              closed += SessionSummary(userId, new Timestamp(s.start),
-                new Timestamp(s.end), s.n, s.total)
-              cur = Some(SessionState(t, t, 1, e.value))
-            case None =>
-              cur = Some(SessionState(t, t, 1, e.value))
-          }
+    keyedFold(events)(_.user_id) { (userId, st: Option[SessionState], rows, _) =>
+      // fold the micro-batch's rows into sessions, emitting any that a
+      // gap closes inside the batch; keep the trailing one in state
+      var cur = st
+      val closed = inOrder(rows).flatMap { e =>
+        val t = e.ts.getTime
+        cur match {
+          case Some(s) if t - s.end <= gapMs =>
+            // min() start: a late in-watermark event can precede the
+            // session's current start when batches arrive out of order
+            cur = Some(SessionState(math.min(s.start, t), math.max(s.end, t),
+              s.n + 1, s.total + e.value))
+            None
+          case prev =>
+            cur = Some(SessionState(t, t, 1, e.value))
+            prev.map(summary(userId, _))
         }
-        cur.foreach { s =>
-          state.update(s)
-          // clamp above the current watermark: a very late event (older
-          // than watermark - gap) would otherwise compute a timeout at or
-          // before the watermark, which Spark rejects with an
-          // IllegalArgumentException and kills the query
-          state.setTimeoutTimestamp(
-            math.max(s.end + gapMs, state.getCurrentWatermarkMs + 1))
-        }
-        closed.result().iterator
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      (cur.map(s => s -> (s.end + gapMs)), closed)
+    } { (userId, s) => (None, Seq(summary(userId, s))) }
   }
 
   /** STREAMING KMV distinct-count: per event type, an estimate of the
@@ -829,17 +772,10 @@ object EventsStream {
     * horizon is an unbounded key set, which is exactly what
     * `dropDuplicatesWithinWatermark` cannot provide past its horizon).
     *
-    * The hash column is the SAME engine-reproducible
-    * [[graft.queries.Sketches.h60]] expression the batch sketches use,
-    * computed in the DataFrame before the typed state op — so the
-    * stateful code only maintains sorted longs, and streaming/batch
-    * parity is a column-for-column replay (EventsStreamSpec).
-    *
     * Emission: append-once per quiesce — when the watermark passes the
     * last activity + `quiesceMinutes`, the group emits its
-    * estimate-so-far and KEEPS the sketch (cardinality is monotone; a
-    * later burst re-arms the timeout and a later quiesce emits the
-    * updated estimate). Estimator = the batch twins' exactly:
+    * estimate-so-far and keeps the sketch (the fold's sketch expiry).
+    * Hash (`userHash`) and estimator are the batch twin's exactly:
     * k_seen < k → exact count; else (k−1)·2^60 / kth-hash.
     */
   def kmvDistinctUsers(events: Dataset[Event], k: Int = 256,
@@ -847,40 +783,19 @@ object EventsStream {
     val spark = events.sparkSession
     import spark.implicits._
     val quiesceMs = quiesceMinutes * 60L * 1000L
-    val hashed = events
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_type"),
-        graft.queries.Sketches.h60(concat_ws(":", col("user_id"), lit("kmv"))).as("h"),
-        col("ts"))
-      .as[(String, Long, Timestamp)]
 
-    def fn(typ: String, rows: Iterator[(String, Long, Timestamp)],
-        state: GroupState[KmvStreamState]): Iterator[KmvUserEstimate] = {
-      if (state.hasTimedOut) {
-        val hs = state.get.hashes
-        val est =
-          if (hs.size < k) hs.size.toDouble
-          else (k - 1).toDouble * math.pow(2, 60) / hs.last.toDouble
-        // state NOT removed: the sketch is the bounded carrier of the
-        // stream's whole history; no new timeout is set, so a fully
-        // quiet group emits once, not every batch
-        Iterator.single(KmvUserEstimate(typ, hs.size, math.round(est * 1e6) / 1e6))
-      } else {
-        val batch = rows.toSeq
-        val merged = (state.getOption.map(_.hashes).getOrElse(Nil) ++ batch.map(_._2))
-          .distinct.sorted.take(k)
-        state.update(KmvStreamState(merged))
-        val lastMs = batch.map(_._3.getTime).max
-        // same watermark clamp as sessionize: a timeout at or before
-        // the current watermark is rejected by the engine
-        state.setTimeoutTimestamp(
-          math.max(lastMs + quiesceMs, state.getCurrentWatermarkMs + 1))
-        Iterator.empty
-      }
+    keyedFold(userHashes(events, "kmv"))(_._1) { (_, st: Option[KmvStreamState], rows, _) =>
+      val batch = rows.toSeq
+      val merged = (st.map(_.hashes).getOrElse(Nil) ++ batch.map(_._2))
+        .distinct.sorted.take(k)
+      (Some(KmvStreamState(merged) -> (batch.map(_._3.getTime).max + quiesceMs)), Nil)
+    } { (typ, s) =>
+      val hs = s.hashes
+      val est =
+        if (hs.size < k) hs.size.toDouble
+        else (k - 1).toDouble * math.pow(2, 60) / hs.last.toDouble
+      (Some(s), Seq(KmvUserEstimate(typ, hs.size, math.round(est * 1e6) / 1e6)))
     }
-
-    hashed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
   /** STREAMING theta-sketch overlap — the audience-overlap question
@@ -897,62 +812,45 @@ object EventsStream {
     * associative and commutative, so replay order cannot change the
     * sketch (the same argument as the HLL MAX-merge).
     *
-    * Emission: append-once per quiesce, the [[kmvDistinctUsers]]
-    * contract (sketches kept, a later burst re-arms the timeout).
+    * Emission: append-once per quiesce, as [[kmvDistinctUsers]].
     */
   def thetaOverlapUsers(events: Dataset[Event], k: Int = 256,
       quiesceMinutes: Int = 30): Dataset[ThetaOverlap] = {
     val spark = events.sparkSession
     import spark.implicits._
     val quiesceMs = quiesceMinutes * 60L * 1000L
+    def overlap(st: ThetaStreamState): Option[ThetaOverlap] =
+      if (st.keptA.isEmpty || st.keptB.isEmpty) None
+      else {
+        val theta = math.min(st.keptA.last, st.keptB.last)
+        val ua = st.keptA.filter(_ < theta).toSet
+        val ub = st.keptB.filter(_ < theta).toSet
+        val union = (ua ++ ub).size
+        val inter = (ua intersect ub).size
+        def est(n: Int): Double =
+          math.round(n.toDouble * math.pow(2, 60) / theta.toDouble * 1e6) / 1e6
+        Some(ThetaOverlap(st.keptA.size, st.keptB.size, theta,
+          union, inter, est(union), est(inter)))
+      }
+
     // NO pre-group type filter: a filter gets pushed below the
     // EventTimeWatermark node, so other-type rows (including a
     // watermark-advancing sentinel) would stop feeding the event
     // clock. Instead every row flows through; non-set types land in
     // their own group (key 1) whose state never accumulates hashes
     // and whose timeout emits nothing — the hllDistinctUsers design.
-    val hashed = events
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_type"),
-        graft.queries.Sketches.h60(
-          concat_ws(":", col("user_id"), lit("theta"))).as("h"),
-        col("ts"))
-      .as[(String, Long, Timestamp)]
-
-    def fn(key: Int, rows: Iterator[(String, Long, Timestamp)],
-        state: GroupState[ThetaStreamState]): Iterator[ThetaOverlap] = {
-      if (state.hasTimedOut) {
-        val st = state.get
-        if (st.keptA.isEmpty || st.keptB.isEmpty) Iterator.empty
-        else {
-          val theta = math.min(st.keptA.last, st.keptB.last)
-          val ua = st.keptA.filter(_ < theta).toSet
-          val ub = st.keptB.filter(_ < theta).toSet
-          val union = (ua ++ ub).size
-          val inter = (ua intersect ub).size
-          def est(n: Int): Double =
-            math.round(n.toDouble * math.pow(2, 60) / theta.toDouble * 1e6) / 1e6
-          Iterator.single(ThetaOverlap(st.keptA.size, st.keptB.size, theta,
-            union, inter, est(union), est(inter)))
-        }
-      } else {
-        val batch = rows.toSeq
-        val st = state.getOption.getOrElse(ThetaStreamState(Nil, Nil))
-        def fold(cur: List[Long], set: String): List[Long] =
-          (cur ++ batch.collect { case (s, h, _) if s == set => h })
-            .distinct.sorted.take(k)
-        state.update(ThetaStreamState(
-          fold(st.keptA, "view"), fold(st.keptB, "purchase")))
-        val lastMs = batch.map(_._3.getTime).max
-        state.setTimeoutTimestamp(
-          math.max(lastMs + quiesceMs, state.getCurrentWatermarkMs + 1))
-        Iterator.empty
-      }
-    }
-
-    hashed
-      .groupByKey(r => if (r._1 == "view" || r._1 == "purchase") 0 else 1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    val setKey = (r: (String, Long, Timestamp)) =>
+      if (r._1 == "view" || r._1 == "purchase") 0 else 1
+    keyedFold(userHashes(events, "theta"))(setKey) {
+        (_, st: Option[ThetaStreamState], rows, _) =>
+      val batch = rows.toSeq
+      val cur = st.getOrElse(ThetaStreamState(Nil, Nil))
+      def fold(kept: List[Long], set: String): List[Long] =
+        (kept ++ batch.collect { case (s, h, _) if s == set => h })
+          .distinct.sorted.take(k)
+      val next = ThetaStreamState(fold(cur.keptA, "view"), fold(cur.keptB, "purchase"))
+      (Some(next -> (batch.map(_._3.getTime).max + quiesceMs)), Nil)
+    } { (_, s) => (Some(s), overlap(s).toSeq) }
   }
 
   /** Batch twin of [[thetaOverlapUsers]] over the same rows — the
@@ -963,9 +861,7 @@ object EventsStream {
   def thetaOverlapUsersBatch(events: Dataset[Event], k: Int = 256): DataFrame = {
     val hashes = events.toDF()
       .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_type").as("st"),
-        graft.queries.Sketches.h60(
-          concat_ws(":", col("user_id"), lit("theta"))).as("h"))
+      .select(col("event_type").as("st"), userHash("theta").as("h"))
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("st")).orderBy(col("h"))
@@ -1038,7 +934,7 @@ object EventsStream {
       val words = state.getOption.map(_.words.clone())
         .getOrElse(new Array[Long](bitsPerBucket / 64))
       val out = Seq.newBuilder[Event]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      inOrder(rows).foreach { e =>
         val pos = positions(e.user_id)
         val seen = pos.forall(p => (words(p >> 6) & (1L << (p & 63))) != 0)
         if (!seen) {
@@ -1061,8 +957,7 @@ object EventsStream {
     */
   def kmvDistinctUsersBatch(events: Dataset[Event], k: Int = 256): DataFrame = {
     val hashes = events
-      .select(col("event_type"),
-        graft.queries.Sketches.h60(concat_ws(":", col("user_id"), lit("kmv"))).as("h"))
+      .select(col("event_type"), userHash("kmv").as("h"))
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("h"))
@@ -1089,9 +984,7 @@ object EventsStream {
     * counting); the batch twin below is the parity target
     * (EventsStreamSpec).
     *
-    * Emission: append-once per quiesce, exactly [[kmvDistinctUsers]]'s
-    * contract — registers are kept (cardinality is monotone), a later
-    * burst re-arms the timeout.
+    * Emission: append-once per quiesce, as [[kmvDistinctUsers]].
     */
   def hllDistinctUsers(events: Dataset[Event],
       quiesceMinutes: Int = 30): Dataset[HllUserEstimate] = {
@@ -1099,13 +992,6 @@ object EventsStream {
     import spark.implicits._
     val quiesceMs = quiesceMinutes * 60L * 1000L
     val M = 64
-    val hashed = events
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_type"),
-        graft.queries.Sketches.h60(
-          concat_ws(":", col("user_id"), lit("hll"))).as("h"),
-        col("ts"))
-      .as[(String, Long, Timestamp)]
 
     def estimate(regs: Seq[Long]): (Int, Double) = {
       val sScaled = regs.map(r => 1L << (55 - r)).sum
@@ -1117,33 +1003,22 @@ object EventsStream {
       (v, math.round(est * 1e6) / 1e6)
     }
 
-    def fn(typ: String, rows: Iterator[(String, Long, Timestamp)],
-        state: GroupState[HllStreamState]): Iterator[HllUserEstimate] = {
-      if (state.hasTimedOut) {
-        val (v, est) = estimate(state.get.regs)
-        Iterator.single(HllUserEstimate(typ, v, est))
-      } else {
-        val batch = rows.toSeq
-        val regs = state.getOption.map(_.regs.toArray)
-          .getOrElse(Array.fill(M)(0L))
-        batch.foreach { case (_, h, _) =>
-          val b = (h / 18014398509481984L).toInt // h DIV 2^54
-          val w = h % 18014398509481984L
-          val rank =
-            if (w == 0) 55L
-            else 55L - (64 - java.lang.Long.numberOfLeadingZeros(w))
-          if (rank > regs(b)) regs(b) = rank
-        }
-        state.update(HllStreamState(regs.toVector))
-        val lastMs = batch.map(_._3.getTime).max
-        state.setTimeoutTimestamp(
-          math.max(lastMs + quiesceMs, state.getCurrentWatermarkMs + 1))
-        Iterator.empty
+    keyedFold(userHashes(events, "hll"))(_._1) { (_, st: Option[HllStreamState], rows, _) =>
+      val batch = rows.toSeq
+      val regs = st.map(_.regs.toArray).getOrElse(Array.fill(M)(0L))
+      batch.foreach { case (_, h, _) =>
+        val b = (h / 18014398509481984L).toInt // h DIV 2^54
+        val w = h % 18014398509481984L
+        val rank =
+          if (w == 0) 55L
+          else 55L - (64 - java.lang.Long.numberOfLeadingZeros(w))
+        if (rank > regs(b)) regs(b) = rank
       }
+      (Some(HllStreamState(regs.toVector) -> (batch.map(_._3.getTime).max + quiesceMs)), Nil)
+    } { (typ, s) =>
+      val (v, est) = estimate(s.regs)
+      (Some(s), Seq(HllUserEstimate(typ, v, est)))
     }
-
-    hashed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
   /** Batch twin of [[hllDistinctUsers]] over the same rows: the
@@ -1157,9 +1032,7 @@ object EventsStream {
     val M = 64
     val pow54 = 18014398509481984L
     val rows = events.toDF()
-      .select(col("event_type"),
-        graft.queries.Sketches.h60(
-          concat_ws(":", col("user_id"), lit("hll"))).as("h"))
+      .select(col("event_type"), userHash("hll").as("h"))
       .select(col("event_type"), expr(s"h DIV $pow54").as("bucket"),
         pmod(col("h"), lit(pow54)).as("w"))
       .select(col("event_type"), col("bucket"),
@@ -1191,7 +1064,7 @@ object EventsStream {
     */
   def dedupedEvents(events: Dataset[Event]): Dataset[Event] =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", Lateness)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming ordered funnel (view → click → purchase, the batch
@@ -1222,39 +1095,23 @@ object EventsStream {
         tp.map(new Timestamp(_)), depth)
     }
 
-    def fn(userId: Long, rows: Iterator[Event],
-        state: GroupState[FunnelBuf]): Iterator[FunnelRow] = {
-      if (state.hasTimedOut) {
-        val b = state.get
-        state.remove()
-        Iterator.single(close(userId, b))
-      } else {
-        var b = state.getOption.getOrElse(FunnelBuf(Nil, Nil, Nil, Long.MinValue))
-        rows.foreach { e =>
-          val t = e.ts.getTime
-          b = e.event_type match {
-            case "view"     => b.copy(views = t :: b.views, last = math.max(b.last, t))
-            case "click"    => b.copy(clicks = t :: b.clicks, last = math.max(b.last, t))
-            case "purchase" => b.copy(purchases = t :: b.purchases, last = math.max(b.last, t))
-            // non-step events still mark the user active (a user with
-            // only such events closes at depth 0, matching the batch's
-            // DISTINCT user_id left spine)
-            case _          => b.copy(last = math.max(b.last, t))
-          }
+    keyedFold(events)(_.user_id) { (_, st: Option[FunnelBuf], rows, wm) =>
+      var b = st.getOrElse(FunnelBuf(Nil, Nil, Nil, Long.MinValue))
+      rows.foreach { e =>
+        val t = e.ts.getTime
+        b = e.event_type match {
+          case "view"     => b.copy(views = t :: b.views, last = math.max(b.last, t))
+          case "click"    => b.copy(clicks = t :: b.clicks, last = math.max(b.last, t))
+          case "purchase" => b.copy(purchases = t :: b.purchases, last = math.max(b.last, t))
+          // non-step events still mark the user active (a user with
+          // only such events closes at depth 0, matching the batch's
+          // DISTINCT user_id left spine)
+          case _          => b.copy(last = math.max(b.last, t))
         }
-        b = b.compacted(state.getCurrentWatermarkMs)
-        state.update(b)
-        // clamped above the watermark, as in sessionize
-        state.setTimeoutTimestamp(
-          math.max(b.last + idleMs, state.getCurrentWatermarkMs + 1))
-        Iterator.empty
       }
-    }
-
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+      b = b.compacted(wm)
+      (Some(b -> (b.last + idleMs)), Nil)
+    } { (userId, b) => (None, Seq(close(userId, b))) }
   }
 
   /** STREAM-STREAM interval join: attribute each purchase to the views
@@ -1274,12 +1131,12 @@ object EventsStream {
     val views = events.toDF()
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "10 minutes")
+      .withWatermark("view_ts", Lateness)
     val purchases = events.toDF()
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
+      .withWatermark("purchase_ts", Lateness)
     purchases.join(views,
       col("user_id") === col("p_user") &&
         col("view_ts") <= col("purchase_ts") &&

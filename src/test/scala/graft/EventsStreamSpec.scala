@@ -455,6 +455,36 @@ class EventsStreamSpec extends SparkSpec {
     // only k = 2 hashes, and its estimate is not the exact short-circuit
     assert(streamed("view")._1 === 2)
     assert(streamed("purchase")._1 === 2)
+
+    // the kept sketch re-arms: a second run over the same checkpoint
+    // adds two new view users above the restored watermark and a later
+    // sentinel, so the view group quiesces again and emits its updated
+    // estimate; the first run's rows are unchanged. User 30's hash
+    // falls between the first run's two smallest view hashes and user
+    // 6's above them, so the new estimate needs the kept sketch: a
+    // sketch rebuilt from the second run alone would cut at user 6
+    val run1 = spark.read.parquet(out).as[(String, Int, Double)].collect().toSeq
+    Files.writeString(Paths.get(in, "events2.jsonl"), Seq(
+      ev(6, 106, "view", 1.0, "2025-07-01T23:10:00Z"),
+      ev(30, 130, "view", 1.0, "2025-07-01T23:11:00Z"),
+      ev(999, 1999, "wmpush", 0.0, "2025-07-02T12:00:00Z")).mkString("\n"))
+    EventsStream.runToParquet(
+      EventsStream.kmvDistinctUsers(
+        EventsStream.parse(spark.readStream.text(in)), k = 2).toDF(),
+      out, ck).awaitTermination(120000)
+    val run2 = spark.read.parquet(out).as[(String, Int, Double)].collect().toSeq
+    assert(run1.diff(run2).isEmpty, "first run's rows unchanged")
+    val added = run2.diff(run1)
+    assert(added.size === 1 && added.head._1 === "view", added)
+    val (_, kSeen2, est2) = added.head
+    assert(kSeen2 > streamed("view")._1 || est2 > streamed("view")._2,
+      s"updated view estimate ($kSeen2, $est2) vs first ${streamed("view")}")
+    val (bk2, be2) = EventsStream.kmvDistinctUsersBatch(
+      EventsStream.parse(spark.read.text(in)).toDF().as[EventsStream.Event], k = 2)
+      .as[(String, Int, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      .apply("view")
+    assert(kSeen2 === bk2, "second view k_seen")
+    assert(math.abs(est2 - be2) <= 1e-6, s"second view estimate: stream $est2 vs batch $be2")
   }
 
   test("streaming HLL: quiesce estimates replay the batch register derivation") {
@@ -739,6 +769,32 @@ class EventsStreamSpec extends SparkSpec {
       val settled = raw.compacted(Long.MaxValue)
       assert(settled.views.size <= 1 && settled.clicks.size <= 1 && settled.purchases.size <= 1)
     }
+  }
+
+  test("census: one keyed event-time fold owns the stateful lifecycle in main") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    // (file, enclosing object member) of every code line holding
+    // `token`; full-line comments are not code
+    val memberDef = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    def sites(token: String): Seq[(String, String)] = sources.flatMap { f =>
+      var member = ""
+      Files.readAllLines(f).asScala.flatMap { l =>
+        memberDef.findFirstMatchIn(l).foreach(m => member = m.group(1))
+        val t = l.trim
+        val comment = t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+        if (!comment && l.contains(token)) Some(root.relativize(f).toString -> member)
+        else None
+      }
+    }
+    val es = "graft/streaming/EventsStream.scala"
+    // the fold, plus noveltyFilter: no timeout and no watermark
+    assert(sites("flatMapGroupsWithState(") ===
+      Seq(es -> "keyedFold", es -> "noveltyFilter"))
+    assert(sites("setTimeoutTimestamp") === Seq(es -> "keyedFold"))
+    assert(sites("hasTimedOut") === Seq(es -> "keyedFold"))
   }
 
   test("second AvailableNow run over the same checkpoint emits nothing new") {
